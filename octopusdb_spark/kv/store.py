@@ -1035,6 +1035,15 @@ class KVStore:
             out = out.unionByName(kept_m)
         return out
 
+    @staticmethod
+    def _dead(now: int):
+        """THE dead-row predicate over stored rows: a tombstone (neither an
+        inline value nor a pointer) or expired at ``now``. The live view
+        keeps its negation; compaction drops what it matches."""
+        return (F.col("value").isNull() & F.col("value_ptr").isNull()) | (
+            (F.col("expires_at") != 0) & (F.col("expires_at") <= F.lit(now))
+        )
+
     def _drop_dead_rows(self, df: DataFrame, dead, held: bool) -> DataFrame:
         """Drop dead rows (tombstones / expired / caller-scoped) from a
         retained set. Without holds the retained set has one row per key,
@@ -1055,22 +1064,6 @@ class KVStore:
             .filter(F.col("_al") == 1)
             .drop("_al")
         )
-
-    def _split_rts_by_retention(self, rts: list) -> tuple[list, list]:
-        """Partition range tombstones into (clearable, held): clearable =
-        no registered snapshot holds a seq below the tombstone's stamp
-        (``rt.seq <= oldest_held_seq()``; no holds = all clearable). ONE
-        definition shared by full and leveled compaction so the two
-        retirement paths can never diverge."""
-        min_held = self.oldest_held_seq()
-        clearable: list = []
-        kept: list = []
-        for rt in rts or []:
-            if min_held is None or int(rt["seq"]) <= min_held:
-                clearable.append(rt)
-            else:
-                kept.append(rt)
-        return clearable, kept
 
     @staticmethod
     def _newest_of(df: DataFrame) -> DataFrame:
@@ -1195,10 +1188,7 @@ class KVStore:
                 "_fold_marker requires the merge-operator fold path "
                 "(operator configured and has_merge_operands set)"
             )
-        live = self._newest_of(base).filter(
-            (F.col("value").isNotNull() | F.col("value_ptr").isNotNull())
-            & ((F.col("expires_at") == 0) | (F.col("expires_at") > F.lit(now)))
-        )
+        live = self._newest_of(base).filter(~self._dead(now))
         # range tombstones: the historical manifest's own list under time
         # travel, the live list otherwise (see delete_range)
         rt_mask = self._rt_mask(rt_list, as_of)
@@ -2558,10 +2548,10 @@ class KVStore:
         across epochs; the view's newest-wins dedup already handles that.
 
         ``extra_stats``: {name: row-level Column}, each SUM-aggregated per
-        bucket alongside the built-in stats; when provided, the return
-        value is ``(segs, rows)`` with ``rows`` the per-bucket stat
-        mappings (None sums normalized to 0). Lets callers fold their own
-        accounting into the write's own stats instead of re-scanning.
+        bucket alongside the built-in stats. Returns ``(segs, rows)`` with
+        ``rows`` the per-bucket stat mappings (built-in stats plus every
+        extra one). Lets callers fold their own accounting into the
+        write's own stats instead of re-scanning.
 
         Stats are collected as OBSERVED metrics of the write job itself
         (``Dataset.observe``, r16 guide §1.2 "fewer passes"): the old
@@ -2705,9 +2695,7 @@ class KVStore:
                     run_id=staging_id,
                 )
             )
-        if extra_stats is not None:
-            return segs, stats
-        return segs
+        return segs, stats
 
     def _dropped_ptr_bytes(self, participants: list, merged_segs: list) -> dict:
         """Discard-stats accounting (A17, `kv/lsm/compact.go:314-335`): value
@@ -2801,21 +2789,16 @@ class KVStore:
         overlap-below rule, `kv/lsm/compact.go:362-369`). Full cleanup
         happens in compact().
 
-        Range tombstones ARE retired here, retention-aware (ADVICE r7 —
-        without this, leveled-only maintenance grows the manifest list and
-        every read's predicate chain without bound): a tombstone is
-        *clearable* when no held snapshot still needs it
-        (``rt.seq <= oldest_held_seq()``; no holds = all clearable — a
-        holder at seq >= rt.seq reads with the mask active anyway, so
-        physically dropping covered rows changes nothing it can see, and
-        its ``changes_since`` delta starts above rt.seq). Clearable masks
-        are applied physically to THIS merge's output, and a tombstone is
-        dropped from the manifest once no remaining live segment can hold
-        a covered row (key-range overlap via the manifest interval index,
-        seq bound via the exact created_seq stamp) — the merge output
-        itself is known clean. Unregistered as-of readers below the
-        tombstone's seq lose covered rows exactly as under full
-        ``compact()``; hold the snapshot to keep it exact."""
+        Range tombstones ARE retired here, retention-aware, by the shared
+        tail ``_rewrite_commit`` once no data segment outside the merge
+        overlaps one (ADVICE r7 — without this, leveled-only
+        maintenance grows the manifest list and every read's predicate
+        chain without bound). A holder at seq >= rt.seq reads with the
+        mask active anyway, so physically dropping covered rows changes
+        nothing it can see, and its ``changes_since`` delta starts above
+        rt.seq. Unregistered as-of readers below the tombstone's seq lose
+        covered rows exactly as under full ``compact()``; hold the
+        snapshot to keep it exact."""
         now = int(time.time()) if now is None else now
         state = self.manifest.state
         dst_level = min(src_level + 1, self.MAX_LEVEL)
@@ -2844,60 +2827,71 @@ class KVStore:
             src_rows = sum(s.row_count for s in src)
             if src_newer and dst_rows >= self.EPOCH_SPLIT_RATIO * max(src_rows, 1):
                 cut = base_max
-        self._merge_commit(state, participants, dst_level, target_segments, cut)
+        self._rewrite_commit(
+            participants, self._retained_df(participants), dst_level,
+            target_segments, epoch_cut=cut,
+        )
 
-    def _merge_commit(
+    def _rewrite_commit(
         self,
-        state,
         participants: list,
+        merged: DataFrame,
         dst_level: int,
         target_segments: int,
-        epoch_cut,
+        epoch_cut: int | None = None,
+        probes: dict | None = None,
     ) -> None:
-        """Shared merge tail for compact_level / compact_tier: newest per
-        key among participants PLUS held boundary versions (_retained_df —
-        a held snapshot's as_of read survives merges of the versions it
-        resolves to), clearable range-tombstone masks applied physically,
-        ranged output segments, discard-stat routing, retention-aware
-        tombstone retirement, one manifest commit."""
-        merged = self._retained_df(participants)
-        rts = state.range_tombstones or []
-        clearable, _ = self._split_rts_by_retention(rts)
-        rt_mask = self._rt_mask(clearable, None)
-        if rt_mask is not None:
-            merged = merged.filter(rt_mask)
-        # created_seq on each output is the exact per-segment min(seq)
-        # (stamped inside _write_ranged_segments), so as-of pruning stays
-        # both tight and sound across merges of legacy segments
-        new_segs = self._write_ranged_segments(
-            merged,
-            dst_level,
-            target_segments,
-            epoch_cut=epoch_cut,
-        )
-        drops = self._dropped_ptr_bytes(participants, new_segs)
+        """THE compaction tail (doCompact, `kv/lsm/compact.go:124-168`):
+        replace ``participants`` with ``merged`` written as ranged
+        ``dst_level`` segments, in one manifest commit. ``compact``,
+        ``compact_range``, ``compact_level`` and ``compact_tier`` all end
+        here; each decides only which segments take part, the merged frame
+        (version retention, its dead-row rule, ``drop_where``) and the
+        destination level. The tail owns the rest:
+
+        - a clearable range tombstone (no held snapshot below its seq:
+          ``rt.seq <= oldest_held_seq()``; no holds = all clearable) is
+          applied physically to the output when every data segment outside
+          the compaction that overlaps its key range holds only rows it
+          masks anyway (``max_seq <= rt.seq``). Reads pick the newest row
+          by (version, seq) and only then mask it, so dropping a masked
+          newest row must not expose an unmasked one — a lower-version row
+          written after the tombstone in an untouched segment would be. It
+          leaves the manifest when no data segment outside the compaction
+          overlaps its range at all; a full compaction keeps none and
+          clears every clearable tombstone. The rest stay listed and are
+          masked at read time;
+        - value pointers present in the participants but absent from the
+          output are routed as discard stats onto their values segments;
+        - ``probes``: manifest flag name -> row-level 0/1 Column, counted
+          by the write itself; each flag is committed as whether any
+          written row counts (the verifying probes of a full compaction).
+
+        created_seq on each output is the exact per-segment min(seq)
+        (stamped inside ``_write_ranged_segments``), so as-of pruning stays
+        both tight and sound across merges of legacy segments."""
+        state = self.manifest.state
         part_ids = {s.segment_id for s in participants}
         kept = [s for s in state.segments if s.segment_id not in part_ids]
-        # Drop every clearable tombstone no remaining live segment can
-        # still hold covered rows for. new_segs are clean by construction
-        # (mask applied above), so only the kept data segments gate: a
-        # kept segment blocks the drop if its key interval overlaps the
-        # tombstone range AND it may hold rows with seq <= rt.seq (exact
-        # created_seq stamp above the tombstone proves it cannot).
         kept_data = [s for s in kept if s.kind == "data"]
-        remaining_rts = []
+        rts = state.range_tombstones or []
+        min_held = self.oldest_held_seq()
+        applied, cleared = [], []
         for rt in rts:
-            if rt not in clearable:
-                remaining_rts.append(rt)
+            if min_held is not None and int(rt["seq"]) > min_held:
                 continue
-            blocked = any(
-                not (s.exact_min_seq and s.created_seq > int(rt["seq"]))
-                for s in self.manifest.prune_for_range(
-                    rt.get("start"), rt.get("end"), kept_data
-                )
-            )
-            if blocked:
-                remaining_rts.append(rt)
+            near = self.manifest.prune_for_range(rt.get("start"), rt.get("end"), kept_data)
+            if all(s.max_seq is not None and s.max_seq <= int(rt["seq"]) for s in near):
+                applied.append(rt)
+                if not near:
+                    cleared.append(rt)
+        rt_mask = self._rt_mask(applied, None)
+        if rt_mask is not None:
+            merged = merged.filter(rt_mask)
+        new_segs, rows = self._write_ranged_segments(
+            merged, dst_level, target_segments, extra_stats=probes, epoch_cut=epoch_cut
+        )
+        drops = self._dropped_ptr_bytes(participants, new_segs)
         self.manifest.commit(
             ManifestState(
                 version=state.version,
@@ -2905,9 +2899,25 @@ class KVStore:
                 segments=self._with_discard_updates(kept, drops) + new_segs,
                 compacted_bytes=(state.compacted_bytes or 0)
                 + sum(s.size_bytes for s in new_segs),
-                range_tombstones=remaining_rts,
+                range_tombstones=[rt for rt in rts if rt not in cleared],
+                **{f: any(int(r[f] or 0) for r in rows) for f in probes or {}},
             )
         )
+
+    @staticmethod
+    def _compact_rounds(scores, merge, max_rounds: int) -> int:
+        """THE maintenance round loop (runCompacter, `kv/lsm/compact.go:65-85`)
+        shared by every policy: while ``scores()`` (ranked highest first)
+        holds a pick scoring >= 1.0, ``merge`` the top one, at most
+        ``max_rounds`` times. Returns rounds executed."""
+        rounds = 0
+        for _ in range(max_rounds):
+            ready = [pick for pick, sc in scores() if sc >= 1.0]
+            if not ready:
+                break
+            merge(ready[0])
+            rounds += 1
+        return rounds
 
     # Size-tiered banding (Cassandra STCS convention): a segment joins the
     # current bucket while within [0.5x, 1.5x] of the bucket's running
@@ -2915,7 +2925,9 @@ class KVStore:
     TIER_LOW, TIER_HIGH = 0.5, 1.5
     TIER_MIN_THRESHOLD = 4
 
-    def tiered_buckets(self, min_threshold: int | None = None) -> list:
+    def tiered_buckets(
+        self, min_threshold: int | None = None, segments: list | None = None
+    ) -> list:
         """Size-tiered bucket scores — the STCS analog of
         `compaction_priorities` (no reference counterpart: the reference's
         LSM is leveled-only, `kv/lsm/compact.go:626-685`; size-tiering is
@@ -2930,10 +2942,15 @@ class KVStore:
         similar size; score = runs-in-bucket / min_threshold, so a
         bucket triggers exactly when enough same-tier runs have
         accumulated to amortize one merge into the next tier. Returns
-        [(bucket_segments_flat, score)], highest first."""
+        [(bucket_segments_flat, score)], highest first.
+
+        ``segments`` bands only those segments (default: every data
+        segment) — see ``tiered_buckets_for_range``."""
         mt = self.TIER_MIN_THRESHOLD if min_threshold is None else min_threshold
+        if segments is None:
+            segments = self.manifest.state.data_segments()
         runs: dict = {}
-        for s in self.manifest.state.data_segments():
+        for s in segments:
             runs.setdefault(s.run_id or s.segment_id, []).append(s)
         sized = sorted(
             ((sum(x.size_bytes for x in ss), ss) for ss in runs.values()),
@@ -2968,7 +2985,7 @@ class KVStore:
         Output lands one level past the deepest participant purely as a
         generation marker (read correctness orders by seq, not level).
         Version retention and range-tombstone retirement are the shared
-        `_merge_commit` discipline; epoch splitting stays a leveled-only
+        `_rewrite_commit` discipline; epoch splitting stays a leveled-only
         optimization (tiered merges have no base/delta distinction).
 
         ``now`` is accepted for signature symmetry with the other
@@ -2978,9 +2995,10 @@ class KVStore:
         overlap-below rule); full cleanup is `compact()`'s job."""
         if not segments:
             return
+        segments = list(segments)
         dst_level = min(max(s.level for s in segments) + 1, self.MAX_LEVEL)
-        self._merge_commit(
-            self.manifest.state, list(segments), dst_level, target_segments, None
+        self._rewrite_commit(
+            segments, self._retained_df(segments), dst_level, target_segments
         )
 
     def auto_compact_tiered(
@@ -2991,16 +3009,11 @@ class KVStore:
     ) -> int:
         """Run size-tiered merges while any bucket's score >= 1.0 — the
         STCS counterpart of `auto_compact`. Returns rounds executed."""
-        rounds = 0
-        for _ in range(max_rounds):
-            ready = [
-                (b, sc) for b, sc in self.tiered_buckets(min_threshold) if sc >= 1.0
-            ]
-            if not ready:
-                break
-            self.compact_tier(ready[0][0], now=now)
-            rounds += 1
-        return rounds
+        return self._compact_rounds(
+            lambda: self.tiered_buckets(min_threshold),
+            lambda bucket: self.compact_tier(bucket, now=now),
+            max_rounds,
+        )
 
     def auto_compact(self, now: int | None = None, max_rounds: int = 8) -> int:
         """Run compactions under the store's configured policy while any
@@ -3010,14 +3023,11 @@ class KVStore:
         rounds executed."""
         if self.compaction_style == "tiered":
             return self.auto_compact_tiered(now=now, max_rounds=max_rounds)
-        rounds = 0
-        for _ in range(max_rounds):
-            pris = [(lvl, sc) for lvl, sc in self.compaction_priorities() if sc >= 1.0]
-            if not pris:
-                break
-            self.compact_level(pris[0][0], now=now)
-            rounds += 1
-        return rounds
+        return self._compact_rounds(
+            self.compaction_priorities,
+            lambda level: self.compact_level(level, now=now),
+            max_rounds,
+        )
 
     def tiered_buckets_for_range(
         self, start, end, min_threshold: int | None = None
@@ -3029,29 +3039,9 @@ class KVStore:
         family's slice of the shared segment files — no per-CF segment
         families needed; a run with no overlap never participates, so
         cold families are untouched by a hot family's merges."""
-        mt = self.TIER_MIN_THRESHOLD if min_threshold is None else min_threshold
-        overlapping = self.manifest.prune_for_range(self._enc(start), self._enc(end))
-        runs: dict = {}
-        for s in overlapping:
-            runs.setdefault(s.run_id or s.segment_id, []).append(s)
-        sized = sorted(
-            ((sum(x.size_bytes for x in ss), ss) for ss in runs.values()),
-            key=lambda t: t[0],
+        return self.tiered_buckets(
+            min_threshold, self.manifest.prune_for_range(self._enc(start), self._enc(end))
         )
-        buckets: list = []
-        for size, ss in sized:
-            if buckets:
-                avg, members = buckets[-1]
-                if self.TIER_LOW * avg <= size <= self.TIER_HIGH * avg:
-                    members.append(ss)
-                    buckets[-1][0] = avg + (size - avg) / len(members)
-                    continue
-            buckets.append([float(size), [ss]])
-        out = [
-            ([seg for run in members for seg in run], len(members) / mt)
-            for _avg, members in buckets
-        ]
-        return sorted(out, key=lambda x: -x[1])
 
     def compact_cf(
         self,
@@ -3078,6 +3068,9 @@ class KVStore:
           hold newer/older versions — the overlap-below rule; full
           cleanup stays `compact_range`/`compact()`'s job).
 
+        Both policies retire range tombstones by the shared rule of
+        `_rewrite_commit`.
+
         A participating segment may carry other families' rows; they are
         merged, never dropped — the documented cost of the shared-segment
         layout, bounded because range-partitioned segment splits localize
@@ -3089,17 +3082,11 @@ class KVStore:
                 start, end, now=now, target_segments=target_segments
             )
             return {"policy": "leveled", "participants": n, "rounds": 1 if n else 0}
-        rounds = 0
-        for _ in range(max_rounds):
-            ready = [
-                (b, sc)
-                for b, sc in self.tiered_buckets_for_range(start, end)
-                if sc >= 1.0
-            ]
-            if not ready:
-                break
-            self.compact_tier(ready[0][0], now=now)
-            rounds += 1
+        rounds = self._compact_rounds(
+            lambda: self.tiered_buckets_for_range(start, end),
+            lambda bucket: self.compact_tier(bucket, now=now),
+            max_rounds,
+        )
         return {"policy": "tiered", "participants": None, "rounds": rounds}
 
     def maintenance_tick(
@@ -3158,9 +3145,9 @@ class KVStore:
         dropped only when nothing older survives beneath them: dropping a
         dead row that still shadows a retained older version would
         resurrect that version in the live view. Range tombstones follow
-        the same retention rule as leveled compaction — clearable ones
-        (no held snapshot below their seq) apply physically and clear;
-        held ones stay listed and their covered rows stay on disk.
+        the shared rule of ``_rewrite_commit`` — clearable ones (no held
+        snapshot below their seq) apply physically and clear; held ones
+        stay listed and their covered rows stay on disk.
 
         ``drop_where``: optional Column predicate — the RocksDB
         CompactionFilter analog: rows it matches are purged during this
@@ -3203,9 +3190,7 @@ class KVStore:
             return
         held = self.oldest_held_seq() is not None
         merged = self._retained_df(old, with_protected=drop_where is not None)
-        dead_nat = (F.col("value").isNull() & F.col("value_ptr").isNull()) | (
-            (F.col("expires_at") != 0) & (F.col("expires_at") <= F.lit(now))
-        )
+        dead_nat = self._dead(now)
         if drop_where is not None:
             # the filter sees the RESOLVED value (RocksDB hands the
             # filter the value, not a pointer): temporarily substitute
@@ -3263,82 +3248,33 @@ class KVStore:
                 )
                 .select(*[f.name for f in self._schema.fields])
             )
-        clearable, kept_rts = self._split_rts_by_retention(state.range_tombstones)
-        # apply clearable range tombstones physically — the whole keyspace
-        # participates, so every covered version is here to drop, and the
-        # cleared entries can't orphan a mask some segment still needs;
-        # held tombstones keep masking at read until their holds release
-        rt_mask = self._rt_mask(clearable, None)
-        if rt_mask is not None:
-            merged = merged.filter(rt_mask)
         # Flag-maintenance probes ride the write's own observed stats (r16,
         # guide §1.2): full compaction is the ONE place the whole keyspace
         # is rewritten, so counting surviving merge-operand rows and
-        # reserved-prefix (CF) rows during the write answers both verifying
-        # probes without re-reading the fresh output (the old shape paid
-        # one filter+isEmpty scan per flag).
-        need_merge_probe = bool(state.has_merge_operands)
-        need_cf_probe = bool(
-            getattr(state, "column_families_ever", False)
-        ) and not (state.column_families or {})
-        probe_stats: dict = {}
-        if need_merge_probe:
-            probe_stats["_mrows"] = (
+        # reserved-prefix (CF) rows during the write verifies both flags
+        # without re-reading the fresh output. has_merge_operands clears
+        # when no operand rows survive (they do while un-folded or
+        # hold-retained), restoring the non-merge plans and re-enabling the
+        # changefeed; column_families_ever (the same verifying-probe
+        # contract) clears when, with the catalog empty, no reserved-prefix
+        # rows survive.
+        probes: dict = {}
+        if state.has_merge_operands:
+            probes["has_merge_operands"] = (
                 F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
             ).cast("long")
-        if need_cf_probe:
+        if getattr(state, "column_families_ever", False) and not (
+            state.column_families or {}
+        ):
             if self.key_type == "binary":
                 resv_pred = F.expr("substring(key, 1, 1)") == F.lit(
                     CF_RESERVED.encode("ascii")
                 )
             else:
                 resv_pred = F.col("key").startswith(CF_RESERVED)
-            probe_stats["_resvrows"] = resv_pred.cast("long")
-        if probe_stats:
-            new_segs, probe_rows = self._write_ranged_segments(
-                merged,
-                self.MAX_LEVEL,
-                target_segments,
-                extra_stats=probe_stats,
-            )
-        else:
-            probe_rows = []
-            new_segs = self._write_ranged_segments(
-                merged,
-                self.MAX_LEVEL,
-                target_segments,
-            )
-        drops = self._dropped_ptr_bytes(old, new_segs)
-        kept = [s for s in state.segments if s.kind != "data"]
-        # merge-operand flag: clear when no operand rows survive (they do
-        # while un-folded or hold-retained) — restoring the bit-identical
-        # non-merge plans and re-enabling the changefeed.
-        merge_flag = None
-        if need_merge_probe:
-            survivors = sum(int(r["_mrows"] or 0) for r in probe_rows) > 0
-            merge_flag = True if survivors else False
-        # column_families_ever flag maintenance (the same verifying-probe
-        # contract as has_merge_operands): with the catalog empty, the
-        # full rewrite can verify no reserved-prefix rows survive. The
-        # exact surviving-row count was observed during the write itself
-        # (a segment-interval shortcut and a filter+isEmpty probe used to
-        # approximate/decide this; the observed count is both exact and
-        # free).
-        cfs_ever_flag = None
-        if need_cf_probe:
-            survivors = sum(int(r["_resvrows"] or 0) for r in probe_rows) > 0
-            cfs_ever_flag = True if survivors else False
-        self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=self._with_discard_updates(kept, drops) + new_segs,
-                compacted_bytes=(state.compacted_bytes or 0)
-                + sum(s.size_bytes for s in new_segs),
-                range_tombstones=kept_rts,
-                has_merge_operands=merge_flag,
-                column_families_ever=cfs_ever_flag,
-            )
+            probes["column_families_ever"] = resv_pred.cast("long")
+        self._rewrite_commit(
+            old, merged, self.MAX_LEVEL, target_segments, probes=probes
         )
 
     def clone_to(
@@ -3477,9 +3413,13 @@ class KVStore:
 
         Snapshot-aware like compact/compact_level: held boundary versions
         ride `_retained_df` through the rewrite, and in-range dead rows
-        are dropped only when nothing retained survives beneath them."""
+        are dropped only when nothing retained survives beneath them.
+        Range tombstones follow the shared rule of `_rewrite_commit`:
+        a clearable tombstone is applied to the output unless a segment
+        outside the compaction may hold a newer row in its range, and leaves
+        the manifest when no segment outside the compaction overlaps that
+        range (one inside [start, end) always qualifies)."""
         now = int(time.time()) if now is None else now
-        state = self.manifest.state
         participants = self.manifest.prune_for_range(self._enc(start), self._enc(end))
         if not participants:
             return 0
@@ -3488,32 +3428,12 @@ class KVStore:
             in_range = in_range & (F.col("key") >= F.lit(start))
         if end is not None:
             in_range = in_range & (F.col("key") < F.lit(end))
-        dead = (
-            (F.col("value").isNull() & F.col("value_ptr").isNull())
-            | ((F.col("expires_at") != 0) & (F.col("expires_at") <= F.lit(now)))
-        )
         merged = self._drop_dead_rows(
             self._retained_df(participants),
-            in_range & dead,
+            in_range & self._dead(now),
             self.oldest_held_seq() is not None,
         )
-        new_segs = self._write_ranged_segments(
-            merged,
-            self.MAX_LEVEL,
-            target_segments,
-        )
-        drops = self._dropped_ptr_bytes(participants, new_segs)
-        part_ids = {s.segment_id for s in participants}
-        kept = [s for s in state.segments if s.segment_id not in part_ids]
-        self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=self._with_discard_updates(kept, drops) + new_segs,
-                compacted_bytes=(state.compacted_bytes or 0)
-                + sum(s.size_bytes for s in new_segs),
-            )
-        )
+        self._rewrite_commit(participants, merged, self.MAX_LEVEL, target_segments)
         return len(participants)
 
     def compact_values(self, target_segments: int = 4) -> int:

@@ -63,15 +63,17 @@ def _session_stopped(spark: SparkSession) -> bool:
 
 
 def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ("128m", "4194304b", "1g")."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(float(s) * mult)
+    """Parse a Spark byte-size conf value in any of Spark's documented
+    forms, case-insensitive: a bare byte count or one with a b, k/kb, m/mb,
+    g/gb, t/tb or p/pb suffix ("4194304", "128m", "128MB", "1tb"). Raises
+    ValueError on anything else."""
+    import re
+
+    m = re.fullmatch(r"([0-9]*\.?[0-9]+)([kmgtp]?)b?", str(v).strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {v!r}")
+    power = "kmgtp".index(m.group(2)) + 1 if m.group(2) else 0
+    return int(float(m.group(1)) * 1024**power)
 
 
 def _scan_splits(df: DataFrame) -> int:
@@ -87,7 +89,8 @@ def _scan_splits(df: DataFrame) -> int:
     the scan: how many splits Spark's packing would produce for the
     frame's input files under the session's maxPartitionBytes /
     openCostInBytes. Falls back to the RDD probe when the inputs are not
-    stat-able local files (no input files at all, or a remote FS)."""
+    stat-able local files (no input files at all, or a remote FS) or a
+    size conf does not parse."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -117,7 +120,7 @@ def _scan_splits(df: DataFrame) -> int:
             if p.scheme not in ("", "file"):
                 return df.rdd.getNumPartitions()
             total += os.path.getsize(unquote(p.path)) + open_cost
-    except OSError:
+    except (OSError, ValueError):
         return df.rdd.getNumPartitions()
     max_split = min(max_part, max(open_cost, total // max(1, min_pn)))
     return max(1, -(-total // max(1, max_split)))
@@ -147,7 +150,12 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     agg saves; measured on the char-bigram explode: 2.0 s -> 0.6 s warm).
     Apply at expansion sites, not blanket (r17: the gate reads the scan's
     estimated split count via `_scan_splits`, not `.rdd.getNumPartitions()`
-    — cheaper, and immune to reading a post-shuffle partition count)."""
+    — cheaper, and immune to reading a post-shuffle partition count).
+
+    Place it directly above the scan, before any join, aggregation or
+    repartition: the gate answers for the scan's split count and ignores
+    the parallelism an exchange already provides, so below one it would
+    add a redundant full-row shuffle."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if _scan_splits(df) >= target:

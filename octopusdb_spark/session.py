@@ -64,8 +64,3 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver-provided parquet tables as a name->DataFrame dict."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in TABLE_NAMES}

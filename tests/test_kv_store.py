@@ -8,6 +8,7 @@ compaction never changes query results.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from octopusdb_spark.kv import Entry, KVStore
 
@@ -1490,7 +1491,7 @@ def test_kv_model_with_holds_and_range_deletes(spark, tmp_path):
                 flush()
                 store.compact_level(0, now=NOW)
             elif o[0] == "compact_tier":
-                # the size-tiered flavor rides the same _merge_commit
+                # the size-tiered flavor rides the same _rewrite_commit
                 # retention discipline — the model must hold under it too
                 flush()
                 store.auto_compact_tiered(now=NOW, max_rounds=2, min_threshold=2)
@@ -2218,3 +2219,375 @@ def test_tiered_compaction_rum_trade(spark, tmp_path):
     for st in stores.values():
         st.close()
     assert segs["tiered"] >= segs["leveled"], segs
+
+
+# ------------------------------------------------- compaction and discard stats
+
+
+def test_compact_fully_tombstoned_store(spark, tmp_path):
+    store = KVStore(spark, str(tmp_path / "kv"), value_threshold=64)
+    store.set_batch([Entry("a", b"1"), Entry("b", b"2")])
+    store.delete("a")
+    store.delete("b")
+    store.compact(now=NOW)  # must not crash on the empty merged set
+    assert store.view(now=NOW).count() == 0
+    assert store.info()["data_segments"] == 0
+    # store remains writable after the empty compaction
+    store.set_batch([Entry("c", b"3")])
+    assert store.get("c", now=NOW).value == b"3"
+
+
+def test_compaction_records_discard_bytes_and_gc_uses_them(spark, tmp_path):
+    """Compaction accounts superseded value-pointer bytes into the owning
+    values segment's discard_bytes, and gc_values picks candidates from
+    those stats — a segment with real garbage but no recorded stats is not
+    scanned (compaction, not GC, is the stats producer)."""
+    store = KVStore(spark, str(tmp_path / "kv"), value_threshold=64)
+    big = b"A" * 200
+    store.set_batch([Entry(f"a{i}", big) for i in range(10)])  # vseg1
+    vseg1 = store.manifest.state.value_segments()[0].segment_id
+    store.set_batch([Entry(f"a{i}", b"small") for i in range(8)])  # supersede 8
+    assert all(s.discard_bytes == 0 for s in store.manifest.state.value_segments())
+
+    store.compact(now=NOW)
+    seg1 = next(s for s in store.manifest.state.value_segments() if s.segment_id == vseg1)
+    assert seg1.discard_bytes == 8 * 200  # exactly the superseded bytes
+
+    # second values segment: garbage created but NOT compacted → no stats
+    store.set_batch([Entry(f"b{i}", big) for i in range(10)])  # vseg2
+    vseg2 = next(
+        s.segment_id for s in store.manifest.state.value_segments() if s.segment_id != vseg1
+    )
+    store.set_batch([Entry(f"b{i}", b"small") for i in range(8)])
+
+    rewritten = store.gc_values(discard_ratio=0.5, now=NOW)
+    assert rewritten == [vseg1]  # stats-selected; vseg2 skipped despite garbage
+    assert any(s.segment_id == vseg2 for s in store.manifest.state.value_segments())
+
+    # after the next compaction vseg2 gets stats and GC picks it up
+    store.compact(now=NOW)
+    rewritten2 = store.gc_values(discard_ratio=0.5, now=NOW)
+    assert rewritten2 == [vseg2]
+    # no data lost anywhere
+    assert store.get("a3", now=NOW).value == b"small"
+    assert store.get("a9", now=NOW).value == big
+    assert store.get("b9", now=NOW).value == big
+
+
+def test_discard_stats_survive_value_log_merge(spark, tmp_path):
+    """Overwrite garbage created AFTER compact_values merged the value log
+    must still land on the surviving merged segment: live pointers embed
+    pre-merge segment ids, so drops are remapped via the alias set.
+    (Round-2 ADVICE: without the remap, merged segments accumulate
+    invisible garbage that stats-gated GC never reclaims.)"""
+    store = KVStore(spark, str(tmp_path / "kv"), value_threshold=64)
+    big = b"B" * 200
+    # two write batches -> two value segments
+    store.set_batch([Entry(f"k{i}", big) for i in range(6)])
+    store.set_batch([Entry(f"k{i}", big) for i in range(6, 12)])
+    pre_ids = {s.segment_id for s in store.manifest.state.value_segments()}
+    assert len(pre_ids) == 2
+    merged_n = store.compact_values(target_segments=1)
+    assert merged_n == 2
+    [mseg] = store.manifest.state.value_segments()
+    assert set(mseg.aliases) == pre_ids
+    assert mseg.discard_bytes == 0
+
+    # NOW create garbage: overwrite 8 of the 12 big values post-merge
+    store.set_batch([Entry(f"k{i}", b"small") for i in range(8)])
+    store.compact(now=NOW)
+    [mseg2] = [
+        s
+        for s in store.manifest.state.value_segments()
+        if s.segment_id == mseg.segment_id
+    ]
+    # drops referenced the defunct pre-merge ids, remapped onto the merge
+    assert mseg2.discard_bytes == 8 * 200
+
+    # stats-gated GC (have_stats=True) now sees and reclaims the garbage
+    rewritten = store.gc_values(discard_ratio=0.5, now=NOW)
+    assert rewritten == [mseg.segment_id]
+    # the GC rewrite carries the alias chain forward transitively
+    [gseg] = store.manifest.state.value_segments()
+    assert set(gseg.aliases) >= pre_ids | {mseg.segment_id}
+    # no data lost
+    assert store.get("k0", now=NOW).value == b"small"
+    assert store.get("k11", now=NOW).value == big
+
+
+def test_compact_range_touches_only_overlap(spark, tmp_path):
+    """Range-restricted compaction merges only overlapping segments, drops
+    tombstones/expired rows strictly inside the range, and never loses
+    out-of-range versions held elsewhere."""
+    store = KVStore(spark, str(tmp_path / "cr"))
+    # three disjoint key bands via ranged ingest
+    df = spark.createDataFrame(
+        [(f"{b}{i:02d}", f"{b}{i}".encode()) for b in "amz" for i in range(20)],
+        "key string, value binary",
+    )
+    store.ingest_df(df, target_segments=6)
+    store.set_batch([Entry("m05", None), Entry("m06", b"dead", expires_at=NOW - 1)])
+    store.set_batch([Entry("a01", b"newer-a")])  # out-of-range newer version
+    before = {s.segment_id for s in store.manifest.state.data_segments()}
+
+    n = store.compact_range(start="m", end="n", now=NOW)
+    assert n >= 1
+    after = store.manifest.state.data_segments()
+    # segments fully outside [m, n) survived untouched
+    untouched = {s.segment_id for s in after} & before
+    assert untouched, "cold segments should not be rewritten"
+    # every surviving pre-compaction segment lies fully outside [m, n):
+    # anything overlapping the range was a participant and got replaced
+    for s in after:
+        if s.segment_id in untouched:
+            assert s.max_key < "m" or s.min_key >= "n", (
+                f"segment {s.segment_id} [{s.min_key},{s.max_key}] overlaps the range"
+            )
+    # semantic checks: in-range tombstone/expired physically droppable rows gone
+    got = {r["key"]: bytes(r["value"]) for r in store.view(now=NOW).collect()}
+    assert "m05" not in got and "m06" not in got
+    assert got["m07"] == b"m7"
+    assert got["a01"] == b"newer-a"  # newest version wins across segments
+    assert got["z19"] == b"z19"
+    raw_keys = [r["key"] for r in store.raw_df().collect()]
+    assert raw_keys.count("m05") == 0  # physically dropped
+
+
+def test_compact_range_retires_range_tombstones(spark, tmp_path):
+    """compact_range ends in the shared compaction tail, so it applies and
+    retires clearable range tombstones exactly like compact_level: a
+    tombstone inside the window leaves the manifest with its covered rows;
+    one that overlaps a segment outside the compaction stays; one a held
+    snapshot still needs stays with its rows. Reads never change."""
+
+    def live(s, **kw):
+        return {r["key"]: bytes(r["value"]) for r in s.view(now=NOW, **kw).collect()}
+
+    def rt_seqs(s):
+        return sorted(int(rt["seq"]) for rt in s.manifest.state.range_tombstones or [])
+
+    store = KVStore(spark, str(tmp_path / "free"))
+    store.set_batch([Entry(f"a{i}", b"a") for i in range(6)])  # segment [a0, a5]
+    store.set_batch([Entry(f"m{i}", b"m") for i in range(6)])  # segment [m0, m5]
+    inside = store.delete_range(start="m1", end="m3")
+    spanning = store.delete_range(start="a4", end="m1")  # overlaps both segments
+    before = live(store)
+    assert store.compact_range(start="m", end="n", now=NOW) == 1
+    assert live(store) == before
+    assert inside not in rt_seqs(store)  # no segment can hold its rows
+    assert rt_seqs(store) == [spanning]  # the untouched a-segment still can
+    raw = {r["key"] for r in store.raw_df().collect()}
+    assert raw >= {f"a{i}" for i in range(6)}  # outside the compaction
+    assert raw & {"m0", "m1", "m2"} == set()  # masks applied physically
+    assert raw >= {"m3", "m4", "m5"}
+
+    held = KVStore(spark, str(tmp_path / "held"))
+    held.set_batch([Entry(f"m{i}", b"m") for i in range(6)])
+    snap = held.snapshot_seq()
+    held.hold_snapshot("reader", seq=snap)
+    rt = held.delete_range(start="m1", end="m3")
+    before, before_snap = live(held), live(held, as_of=snap)
+    assert "m1" in before_snap and "m1" not in before
+    held.compact_range(start="m", end="n", now=NOW)
+    assert live(held) == before
+    assert live(held, as_of=snap) == before_snap
+    assert rt_seqs(held) == [rt]
+
+
+def test_partial_compaction_keeps_range_tombstone_over_lower_version(spark, tmp_path):
+    """A range-deleted key must stay deleted through a compaction that
+    leaves out a segment holding a newer row under the tombstone: reads
+    pick the newest row by (version, seq) before masking, so dropping the
+    masked v100 row would expose v50, written after the tombstone with a
+    lower version."""
+
+    def build(name):
+        store = KVStore(spark, str(tmp_path / name))
+        store.set_batch([Entry("a5", b"v100", version=100), Entry("m0", b"x")])
+        return store
+
+    ranged = build("range")  # one segment [a5, m0]
+    ranged.delete_range(start="a0", end="b")
+    ranged.set_batch([Entry("a5", b"v50", version=50)])  # segment [a5, a5]
+    assert ranged.get("a5", now=NOW) is None
+    assert ranged.compact_range(start="m", end="n", now=NOW) == 1
+    assert ranged.get("a5", now=NOW) is None
+    assert len(ranged.manifest.state.range_tombstones) == 1
+    ranged.compact(now=NOW)  # every segment takes part: cleared
+    assert ranged.get("a5", now=NOW) is None
+    assert ranged.manifest.state.range_tombstones == []
+
+    leveled = build("level")
+    leveled.compact_level(0, now=NOW)  # [a5, m0] now at L1
+    leveled.delete_range(start="a0", end="b")
+    leveled.set_batch([Entry("a5", b"v50", version=50)])  # L0
+    assert leveled.get("a5", now=NOW) is None
+    leveled.compact_level(1, now=NOW)  # L1 -> L2; the L0 segment stays out
+    assert leveled.get("a5", now=NOW) is None
+    assert leveled.get("m0", now=NOW).value == b"x"
+    assert len(leveled.manifest.state.range_tombstones) == 1
+
+
+def test_maintenance_tick_compacts_and_gcs(spark, tmp_path):
+    store = KVStore(spark, str(tmp_path / "mt"), value_threshold=64)
+    big = b"Q" * 300
+    for b in range(5):  # exceed the L0 trigger
+        store.set_batch([Entry(f"k{i}", big if i < 3 else b"s") for i in range(10)])
+    report = store.maintenance_tick(now=NOW, discard_ratio=0.3)
+    assert report["compaction_rounds"] >= 1
+    # first tick recorded discard stats for the superseded big values;
+    # the same tick (or the next) rewrites the dirty segments
+    if not report["gc_rewritten"]:
+        report = store.maintenance_tick(now=NOW, discard_ratio=0.3)
+    assert report["gc_rewritten"]
+    assert store.get("k0", now=NOW).value == big
+    assert store.get("k5", now=NOW).value == b"s"
+
+
+def test_compact_values_merges_segments_and_preserves_reads(spark, tmp_path):
+    store = KVStore(spark, str(tmp_path / "cv"), value_threshold=64)
+    for b in range(6):  # six small values segments
+        store.set_batch([Entry(f"b{b}k{i}", bytes([65 + b]) * 100) for i in range(3)])
+    assert store.info()["value_segments"] == 6
+    n = store.compact_values(target_segments=2)
+    assert n == 6
+    assert store.info()["value_segments"] == 1  # one logical segment (2 files)
+    # every separated value still reads back
+    for b in range(6):
+        assert store.get(f"b{b}k1", now=NOW).value == bytes([65 + b]) * 100
+    # snapshot reads still resolve through the merged value log
+    snap = store.snapshot_seq()
+    store.set_batch([Entry("b0k0", b"small-now")])
+    assert store.get("b0k0", now=NOW, as_of=snap).value == b"A" * 100
+    # no-op when already at target
+    assert store.compact_values(target_segments=2) == 0
+    # reopen sees the merged layout
+    assert KVStore(spark, store.root).get("b5k2", now=NOW).value == b"F" * 100
+
+
+# ---------------------------------------------------------------- observed
+# segment stats (r16 optimization: _write_ranged_segments folds its manifest
+# stats into the write job as observed conditional aggregates instead of
+# re-reading every freshly written segment; the readback path survives as
+# the wide-write fallback and must stay field-for-field identical)
+
+
+def _stats_store(spark, tmp_path, **kw):
+    return KVStore(spark, f"{tmp_path}/kv", **kw)
+
+
+def _manifest_vs_files(spark, store):
+    """Recompute every data segment's stats straight from its files and
+    compare with what the manifest recorded (whichever stats path ran)."""
+    for s in store.manifest.state.data_segments():
+        df = spark.read.schema(store._schema).parquet(s.path)
+        row = df.agg(
+            F.min("key").alias("mn"),
+            F.max("key").alias("mx"),
+            F.count("*").alias("cnt"),
+            F.sum(F.coalesce(F.length("value"), F.lit(0))).alias("bytes"),
+            F.max("seq").alias("mxs"),
+            F.min("seq").alias("mns"),
+        ).collect()[0]
+        assert store._enc(row["mn"]) == s.min_key, s.segment_id
+        assert store._enc(row["mx"]) == s.max_key, s.segment_id
+        assert row["cnt"] == s.row_count, s.segment_id
+        assert int(row["bytes"] or 0) == s.size_bytes, s.segment_id
+        assert int(row["mxs"]) == s.max_seq, s.segment_id
+        assert s.exact_min_seq and int(row["mns"]) == s.created_seq, s.segment_id
+
+
+def test_observed_segment_stats_match_written_files(spark, tmp_path):
+    df = spark.range(200).select(
+        F.concat(F.lit("k"), F.lpad(F.col("id").cast("string"), 5, "0")).alias("key"),
+        F.col("id").cast("string").cast("binary").alias("value"),
+    )
+    store = _stats_store(spark, tmp_path)
+    assert store.ingest_df(df, target_segments=3) == 200
+    _manifest_vs_files(spark, store)
+    store.compact(now=2_000_000_000, target_segments=2)
+    _manifest_vs_files(spark, store)
+
+
+def test_readback_fallback_stats_match_observed(spark, tmp_path, monkeypatch):
+    """Force the wide-write fallback (OBSERVE_STATS_MAX_COMBOS=0) and pin
+    that both stats paths commit identical manifests — including the
+    extra_stats channel (value separation + merge operands)."""
+    def _load(sub):
+        big = F.lpad(F.lit("v"), 300, "y").cast("binary")
+        df = spark.range(60).select(
+            F.concat(F.lit("k"), F.lpad(F.col("id").cast("string"), 5, "0")).alias("key"),
+            F.when(F.col("id") % 7 == 0, big)
+            .otherwise(F.col("id").cast("string").cast("binary"))
+            .alias("value"),
+            (F.col("id") % 5 == 1).alias("is_op"),
+        )
+        store = KVStore(spark, f"{sub}/kv", merge_op="add", value_threshold=100)
+        assert store.ingest_df(df.filter(~F.col("is_op")), target_segments=3) == 48
+        assert (
+            store.ingest_df(
+                df.filter(F.col("is_op")).select(
+                    "key",
+                    F.lit("3").cast("binary").alias("value"),
+                    "is_op",
+                ),
+                merge_col="is_op",
+                target_segments=2,
+            )
+            == 12
+        )
+        return store
+
+    obs = _load(f"{tmp_path}/a")
+    monkeypatch.setattr(KVStore, "OBSERVE_STATS_MAX_COMBOS", 0)
+    fb = _load(f"{tmp_path}/b")
+    monkeypatch.undo()
+
+    def _norm(store):
+        return sorted(
+            (
+                s.level,
+                s.kind,
+                s.min_key,
+                s.max_key,
+                s.row_count,
+                s.size_bytes,
+                s.created_seq,
+                s.max_seq,
+                s.exact_min_seq,
+                s.total_value_bytes,
+            )
+            for s in store.manifest.state.segments
+        )
+
+    assert _norm(obs) == _norm(fb)
+    assert obs.manifest.state.has_merge_operands is True
+    assert fb.manifest.state.has_merge_operands is True
+    a = sorted((r["key"], bytes(r["value"])) for r in obs.view(now=2_000_000_000).collect())
+    b = sorted((r["key"], bytes(r["value"])) for r in fb.view(now=2_000_000_000).collect())
+    assert a == b
+
+
+def test_compact_flag_probes_ride_observed_stats(spark, tmp_path):
+    """Merge-operand and column_families_ever flag maintenance must reach
+    the same verdicts through the write-observed counts as the old
+    readback probes did."""
+    store = KVStore(spark, f"{tmp_path}/kv", merge_op="add")
+    store.set_batch([Entry("a", b"1"), Entry("b", b"2")])
+    store.merge_batch([("a", b"5")])
+    assert store.info()["has_merge_operands"] is True
+    # un-folded operands survive a full compact: flag stays up
+    store.compact(now=2_000_000_000)
+    assert store.info()["has_merge_operands"] is True
+    # folded then compacted: flag clears
+    assert store.fold_merges(now=2_000_000_000) >= 1
+    store.compact(now=2_000_000_000)
+    assert store.info()["has_merge_operands"] is False
+
+    cf = store.create_cf("tmp")
+    cf.set_batch([Entry("x", b"9")])
+    store.drop_cf("tmp")
+    assert store.manifest.state.column_families_ever is True
+    store.compact(now=2_000_000_000)
+    # no reserved-prefix rows survive the rewrite: flag clears
+    assert not bool(getattr(store.manifest.state, "column_families_ever", False))

@@ -516,3 +516,47 @@ def test_filtered_ann_respects_predicate(spark, sf_dir):
         ordered = sorted(rs, key=lambda x: x["rank"])
         cos = [x["cosine"] for x in ordered]
         assert cos == sorted(cos, reverse=True), (q, cos)
+
+
+def test_scan_split_gate_reads_spark_byte_confs(spark, tmp_path, monkeypatch):
+    """`_parse_bytes` takes every documented Spark byte-size form, and
+    `_scan_splits` (the gate under `spread`) falls back to the RDD probe
+    instead of failing at plan time when a size conf does not parse."""
+    from octopusdb_spark.queries import common
+
+    for text, want in [
+        ("4194304", 4194304),
+        ("4194304b", 4194304),
+        ("512k", 512 << 10),
+        ("512KB", 512 << 10),
+        ("128m", 128 << 20),
+        ("128mb", 128 << 20),
+        ("1G", 1 << 30),
+        ("1gb", 1 << 30),
+        ("1tb", 1 << 40),
+        ("2pb", 2 << 50),
+    ]:
+        assert common._parse_bytes(text) == want, text
+    for text in ("", "mb", "12 parsecs", "1mbb"):
+        with pytest.raises(ValueError):
+            common._parse_bytes(text)
+
+    path = str(tmp_path / "one_file.parquet")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) < spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    orig = spark.conf.get(key)
+    estimate = common._scan_splits(df)
+    spark.conf.set(key, "128mb")
+    try:
+        assert common._scan_splits(df) == estimate
+    finally:
+        spark.conf.set(key, orig)
+
+    def unparseable(v):
+        raise ValueError(v)
+
+    monkeypatch.setattr(common, "_parse_bytes", unparseable)
+    assert common._scan_splits(df) == df.rdd.getNumPartitions()
+    assert common.spread(df, "id").count() == 10

@@ -90,140 +90,6 @@ def test_linear_char_trigrams_match_substring_form(spark):
     assert a.exceptAll(b).union(b.exceptAll(a)).isEmpty()
 
 
-# ---------------------------------------------------------------- observed
-# segment stats (r16 optimization: _write_ranged_segments folds its manifest
-# stats into the write job as observed conditional aggregates instead of
-# re-reading every freshly written segment; the readback path survives as
-# the wide-write fallback and must stay field-for-field identical)
-
-
-def _stats_store(spark, tmp_path, **kw):
-    from octopusdb_spark.kv.store import KVStore
-
-    return KVStore(spark, f"{tmp_path}/kv", **kw)
-
-
-def _manifest_vs_files(spark, store):
-    """Recompute every data segment's stats straight from its files and
-    compare with what the manifest recorded (whichever stats path ran)."""
-    for s in store.manifest.state.data_segments():
-        df = spark.read.schema(store._schema).parquet(s.path)
-        row = df.agg(
-            F.min("key").alias("mn"),
-            F.max("key").alias("mx"),
-            F.count("*").alias("cnt"),
-            F.sum(F.coalesce(F.length("value"), F.lit(0))).alias("bytes"),
-            F.max("seq").alias("mxs"),
-            F.min("seq").alias("mns"),
-        ).collect()[0]
-        assert store._enc(row["mn"]) == s.min_key, s.segment_id
-        assert store._enc(row["mx"]) == s.max_key, s.segment_id
-        assert row["cnt"] == s.row_count, s.segment_id
-        assert int(row["bytes"] or 0) == s.size_bytes, s.segment_id
-        assert int(row["mxs"]) == s.max_seq, s.segment_id
-        assert s.exact_min_seq and int(row["mns"]) == s.created_seq, s.segment_id
-
-
-def test_observed_segment_stats_match_written_files(spark, tmp_path):
-    df = spark.range(200).select(
-        F.concat(F.lit("k"), F.lpad(F.col("id").cast("string"), 5, "0")).alias("key"),
-        F.col("id").cast("string").cast("binary").alias("value"),
-    )
-    store = _stats_store(spark, tmp_path)
-    assert store.ingest_df(df, target_segments=3) == 200
-    _manifest_vs_files(spark, store)
-    store.compact(now=2_000_000_000, target_segments=2)
-    _manifest_vs_files(spark, store)
-
-
-def test_readback_fallback_stats_match_observed(spark, tmp_path, monkeypatch):
-    """Force the wide-write fallback (OBSERVE_STATS_MAX_COMBOS=0) and pin
-    that both stats paths commit identical manifests — including the
-    extra_stats channel (value separation + merge operands)."""
-    from octopusdb_spark.kv.store import KVStore
-
-    def _load(sub):
-        big = F.lpad(F.lit("v"), 300, "y").cast("binary")
-        df = spark.range(60).select(
-            F.concat(F.lit("k"), F.lpad(F.col("id").cast("string"), 5, "0")).alias("key"),
-            F.when(F.col("id") % 7 == 0, big)
-            .otherwise(F.col("id").cast("string").cast("binary"))
-            .alias("value"),
-            (F.col("id") % 5 == 1).alias("is_op"),
-        )
-        store = KVStore(spark, f"{sub}/kv", merge_op="add", value_threshold=100)
-        assert store.ingest_df(df.filter(~F.col("is_op")), target_segments=3) == 48
-        assert (
-            store.ingest_df(
-                df.filter(F.col("is_op")).select(
-                    "key",
-                    F.lit("3").cast("binary").alias("value"),
-                    "is_op",
-                ),
-                merge_col="is_op",
-                target_segments=2,
-            )
-            == 12
-        )
-        return store
-
-    obs = _load(f"{tmp_path}/a")
-    monkeypatch.setattr(KVStore, "OBSERVE_STATS_MAX_COMBOS", 0)
-    fb = _load(f"{tmp_path}/b")
-    monkeypatch.undo()
-
-    def _norm(store):
-        return sorted(
-            (
-                s.level,
-                s.kind,
-                s.min_key,
-                s.max_key,
-                s.row_count,
-                s.size_bytes,
-                s.created_seq,
-                s.max_seq,
-                s.exact_min_seq,
-                s.total_value_bytes,
-            )
-            for s in store.manifest.state.segments
-        )
-
-    assert _norm(obs) == _norm(fb)
-    assert obs.manifest.state.has_merge_operands is True
-    assert fb.manifest.state.has_merge_operands is True
-    a = sorted((r["key"], bytes(r["value"])) for r in obs.view(now=2_000_000_000).collect())
-    b = sorted((r["key"], bytes(r["value"])) for r in fb.view(now=2_000_000_000).collect())
-    assert a == b
-
-
-def test_compact_flag_probes_ride_observed_stats(spark, tmp_path):
-    """Merge-operand and column_families_ever flag maintenance must reach
-    the same verdicts through the write-observed counts as the old
-    readback probes did."""
-    from octopusdb_spark.kv.store import Entry, KVStore
-
-    store = KVStore(spark, f"{tmp_path}/kv", merge_op="add")
-    store.set_batch([Entry("a", b"1"), Entry("b", b"2")])
-    store.merge_batch([("a", b"5")])
-    assert store.info()["has_merge_operands"] is True
-    # un-folded operands survive a full compact: flag stays up
-    store.compact(now=2_000_000_000)
-    assert store.info()["has_merge_operands"] is True
-    # folded then compacted: flag clears
-    assert store.fold_merges(now=2_000_000_000) >= 1
-    store.compact(now=2_000_000_000)
-    assert store.info()["has_merge_operands"] is False
-
-    cf = store.create_cf("tmp")
-    cf.set_batch([Entry("x", b"9")])
-    store.drop_cf("tmp")
-    assert store.manifest.state.column_families_ever is True
-    store.compact(now=2_000_000_000)
-    # no reserved-prefix rows survive the rewrite: flag clears
-    assert not bool(getattr(store.manifest.state, "column_families_ever", False))
-
-
 def test_ann_ledger_observed_equals_aggregated(spark, tmp_path, monkeypatch):
     """The ANN index stats ledger must be byte-for-byte identical whether
     it rides the lists write as observed aggregates (r16) or the

