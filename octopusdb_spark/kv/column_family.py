@@ -22,6 +22,8 @@ a ``drop_cf`` fails fast instead of writing into a dropped range.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -121,16 +123,7 @@ class ColumnFamily:
         return self.store.delete_range(start=lo, end=hi)
 
     def _range_end(self):
-        from octopusdb_spark.kv.store import (
-            _bytes_prefix_upper_bound,
-            _prefix_upper_bound,
-        )
-
-        return (
-            _bytes_prefix_upper_bound(self._prefix)
-            if self.store.key_type == "binary"
-            else _prefix_upper_bound(self._prefix)
-        )
+        return self.store._cf_range(self.name)[1]
 
     def changes_since(self, snapshot_seq: int, **kwargs) -> DataFrame:
         """This family's scoped changefeed (keys stay ENCODED for
@@ -206,21 +199,18 @@ class ColumnFamily:
     def get(self, key, now: int | None = None, as_of: int | None = None):
         self._check()
         e = self.store.get(self._k(key), now=now, as_of=as_of, cf=self.name)
-        if e is None:
-            return None
-        return Entry(
-            key=self._strip(e.key),
-            value=e.value,
-            expires_at=e.expires_at,
-            version=e.version,
-        )
+        return None if e is None else self._user_entry(e)
 
     def mget(self, keys: list, now: int | None = None, as_of: int | None = None) -> dict:
         self._check()
         got = self.store.mget(
             [self._k(k) for k in keys], now=now, as_of=as_of, cf=self.name
         )
-        return {self._strip(k): e for k, e in got.items()}
+        return {e.key: e for e in map(self._user_entry, got.values())}
+
+    def _user_entry(self, e: Entry) -> Entry:
+        """A store ``Entry`` with its key stripped back to user key space."""
+        return replace(e, key=self._strip(e.key))
 
     def view(
         self, now: int | None = None, as_of: int | None = None

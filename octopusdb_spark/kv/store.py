@@ -129,30 +129,24 @@ VALUES_SCHEMA = T.StructType(
 )
 
 
-def _prefix_upper_bound(prefix: str) -> str | None:
-    """Smallest string > every key with this prefix, for segment pruning.
+def _prefix_upper_bound(prefix: str | bytes) -> str | bytes | None:
+    """Smallest key > every key with this prefix, for segment pruning;
+    ``bytes`` in, ``bytes`` out (binary-key mode).
 
-    Increment-with-carry: trailing U+10FFFF characters can't be bumped
-    (chr(0x110000) is invalid), so drop them and bump the previous char.
-    An all-U+10FFFF prefix has no finite bound — return None (no pruning).
+    Increment-with-carry: a trailing top unit (U+10FFFF for strings —
+    chr(0x110000) is invalid — 0xFF for bytes) can't be bumped, so drop
+    it and bump the previous unit. An all-top prefix has no finite
+    bound — return None (no pruning).
     """
-    i = len(prefix) - 1
-    while i >= 0 and ord(prefix[i]) == 0x10FFFF:
+    binary = isinstance(prefix, (bytes, bytearray))
+    units = list(prefix) if binary else [ord(c) for c in prefix]
+    top = 0xFF if binary else 0x10FFFF
+    i = len(units) - 1
+    while i >= 0 and units[i] == top:
         i -= 1
     if i < 0:
         return None
-    return prefix[:i] + chr(ord(prefix[i]) + 1)
-
-
-def _bytes_prefix_upper_bound(prefix: bytes) -> bytes | None:
-    """Byte-key analog: drop trailing 0xFF, bump the previous byte; an
-    all-0xFF prefix has no finite bound."""
-    i = len(prefix) - 1
-    while i >= 0 and prefix[i] == 0xFF:
-        i -= 1
-    if i < 0:
-        return None
-    return prefix[:i] + bytes([prefix[i] + 1])
+    return prefix[:i] + (bytes([units[i] + 1]) if binary else chr(units[i] + 1))
 
 
 @dataclass
@@ -430,12 +424,7 @@ class KVStore:
         if prefix is not None:
             if start is not None or end is not None:
                 raise ValueError("pass either prefix or start/end, not both")
-            start = prefix
-            end = (
-                _bytes_prefix_upper_bound(prefix)
-                if self.key_type == "binary"
-                else _prefix_upper_bound(prefix)
-            )
+            start, end = prefix, _prefix_upper_bound(prefix)
         if start is None and end is None:
             raise ValueError("delete_range needs a bound (start, end, or prefix)")
         # bound types must match the store's key type BEFORE the tombstone
@@ -859,9 +848,7 @@ class KVStore:
                 # operand rows must raise the manifest flag durably (the
                 # sentinel rule set_batch follows) — folded into the ranged
                 # write's own stats, no extra scan (ADVICE r9 finding 2)
-                extra["mcnt"] = (
-                    F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
-                ).cast("long")
+                extra["mcnt"] = self._is_operand().cast("long")
             new_data_segs, bucket_stats = self._write_ranged_segments(
                 data,
                 level=0,
@@ -918,22 +905,37 @@ class KVStore:
             staged.unpersist()
 
     # ------------------------------------------------------------------- read
+    @staticmethod
+    def _visible_at(segs: list, seq: int) -> list:
+        """The segments an as-of-``seq`` read can see: a segment created
+        wholly after the snapshot holds nothing visible, so the read scans
+        O(pre-snapshot segments), not the store. Only segments whose
+        manifest entry MARKS the created_seq stamp as the exact per-row
+        min(seq) (``exact_min_seq``, stamped by every current writer) are
+        pruned. Unmarked segments — legacy upper-bound stamps AND pre-flag
+        compaction outputs that laundered such a stamp under an exact
+        max_seq; historical manifests are where they live on — are
+        conservatively kept: the caller's row-level seq filter keeps
+        correctness, only the pruning degrades."""
+        return [s for s in segs if not s.exact_min_seq or s.created_seq <= seq]
+
+    @staticmethod
+    def _union_segments(groups) -> list:
+        """The union of several pruned segment lists, each segment once, in
+        first-seen order."""
+        seg_ids, out = set(), []
+        for group in groups:
+            for s in group:
+                if s.segment_id not in seg_ids:
+                    seg_ids.add(s.segment_id)
+                    out.append(s)
+        return out
+
     def _read_segments(self, segs: list, schema: T.StructType) -> DataFrame:
         paths = [s.path for s in segs]
         if not paths:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*paths)
-
-    def _values_join_side(self, vsegs: list) -> DataFrame:
-        """The values relation prepared as a join side: broadcast-hinted only
-        when the manifest's exact byte totals say it fits
-        (``BROADCAST_MAX_BYTES``); otherwise unhinted so the planner/AQE
-        picks sort-merge or a runtime broadcast. Never force-broadcast the
-        payload table — see BROADCAST_MAX_BYTES."""
-        vals = self._read_segments(vsegs, VALUES_SCHEMA)
-        if sum(s.size_bytes for s in vsegs) <= self.BROADCAST_MAX_BYTES:
-            return F.broadcast(vals)
-        return vals
 
     def raw_df(self, segs: list | None = None) -> DataFrame:
         segs = self.manifest.state.data_segments() if segs is None else segs
@@ -982,7 +984,7 @@ class KVStore:
         raw = self.raw_df(segs)
         merge_aware = bool(self.manifest.state.has_merge_operands)
         if merge_aware:
-            is_m = F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
+            is_m = self._is_operand()
             m_rows, nm = raw.filter(is_m), raw.filter(~is_m)
         else:
             m_rows, nm = None, raw
@@ -993,19 +995,7 @@ class KVStore:
             out = self._newest_of(nm)
             kept_m = None
             if merge_aware:
-                base_vs = out.select(
-                    "key",
-                    F.col("version").alias("_bv"),
-                    F.col("seq").alias("_bs"),
-                )
-                above_base = (F.col("version") > F.col("_bv")) | (
-                    (F.col("version") == F.col("_bv")) & (F.col("seq") > F.col("_bs"))
-                )
-                kept_m = (
-                    m_rows.join(base_vs, "key", "left")
-                    .filter(F.col("_bv").isNull() | above_base)
-                    .drop("_bv", "_bs")
-                )
+                kept_m = self._operands_above(m_rows, out)
             if with_protected:
                 out = out.withColumn("_protected", F.lit(False))
                 if kept_m is not None:
@@ -1036,12 +1026,56 @@ class KVStore:
         return out
 
     @staticmethod
+    def _is_operand():
+        """THE merge-operand predicate: the row carries BIT_MERGE."""
+        return F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
+
+    @staticmethod
+    def _operands_above(ops: DataFrame, newest: DataFrame) -> DataFrame:
+        """The operands in ``ops`` strictly above their key's row in
+        ``newest`` by (version, seq) — the fold boundary: anything at or
+        below the newest full row is shadowed by it. Keys absent from
+        ``newest`` keep all their operands."""
+        base = newest.select(
+            "key", F.col("version").alias("_bv"), F.col("seq").alias("_bs")
+        )
+        above = (F.col("version") > F.col("_bv")) | (
+            (F.col("version") == F.col("_bv")) & (F.col("seq") > F.col("_bs"))
+        )
+        return (
+            ops.join(base, "key", "left")
+            .filter(F.col("_bv").isNull() | above)
+            .drop("_bv", "_bs")
+        )
+
+    @staticmethod
+    def _expired(now: int):
+        """THE TTL rule (`kv/utils/entry.go:77-80`): a row with an expiry
+        stamp at or before ``now`` is dead."""
+        return (F.col("expires_at") != 0) & (F.col("expires_at") <= F.lit(now))
+
+    @staticmethod
     def _dead(now: int):
         """THE dead-row predicate over stored rows: a tombstone (neither an
         inline value nor a pointer) or expired at ``now``. The live view
         keeps its negation; compaction drops what it matches."""
-        return (F.col("value").isNull() & F.col("value_ptr").isNull()) | (
-            (F.col("expires_at") != 0) & (F.col("expires_at") <= F.lit(now))
+        return (
+            F.col("value").isNull() & F.col("value_ptr").isNull()
+        ) | KVStore._expired(now)
+
+    def _resolve_values(self, df: DataFrame, vsegs: list) -> DataFrame:
+        """WiscKey read (`kv/vlog.go:366-453`): left-join ``df``'s value
+        pointers to the values table and coalesce the payload into
+        ``value``. Rows whose payload was GC'd keep a NULL value. The
+        values side is broadcast-hinted only when the manifest's exact
+        byte totals say it fits (``BROADCAST_MAX_BYTES``); otherwise
+        unhinted so the planner/AQE picks sort-merge or a runtime
+        broadcast. Never force-broadcast the payload table."""
+        vals = self._read_segments(vsegs, VALUES_SCHEMA)
+        if sum(s.size_bytes for s in vsegs) <= self.BROADCAST_MAX_BYTES:
+            vals = F.broadcast(vals)
+        return df.join(vals, df["value_ptr"] == vals["value_id"], "left").withColumn(
+            "value", F.coalesce(F.col("value"), F.col("big_value"))
         )
 
     def _drop_dead_rows(self, df: DataFrame, dead, held: bool) -> DataFrame:
@@ -1125,37 +1159,18 @@ class KVStore:
         (internal: changefeed expansion, pre-images, fold_merges,
         maintenance must see all namespaces)."""
         now = int(time.time()) if now is None else now
-        hist = (
-            self.manifest.load_version(at_version) if at_version is not None else None
+        src_state = (
+            self.manifest.load_version(at_version)
+            if at_version is not None
+            else self.manifest.state
         )
-        if hist is not None and segs is None:
-            segs = hist.data_segments()
+        if segs is None:
+            segs = src_state.data_segments()
             if as_of is not None:
-                # same created_seq prune as the live path, over the
-                # historical manifest's segment list — and the same
-                # exact-stamp gate: historical manifests are precisely
-                # where pre-fix stamps live on
-                segs = [s for s in segs if not s.exact_min_seq or s.created_seq <= as_of]
-        if as_of is not None and segs is None:
-            # Prune only segments whose manifest entry MARKS the
-            # created_seq stamp as the exact per-row min(seq)
-            # (exact_min_seq, stamped by every current writer): a segment
-            # created wholly after the snapshot holds nothing visible, so
-            # the as-of read scans O(pre-snapshot segments), not the store.
-            # Unmarked segments — legacy upper-bound stamps AND pre-flag
-            # compaction outputs that laundered such a stamp under an
-            # exact max_seq (their manifests deserialize to the False
-            # default) — are conservatively scanned; the row-level seq
-            # filter below keeps correctness, only the pruning degrades.
-            segs = [
-                s
-                for s in self.manifest.state.data_segments()
-                if not s.exact_min_seq or s.created_seq <= as_of
-            ]
+                segs = self._visible_at(segs, as_of)
         base = self.raw_df(segs)
         if as_of is not None:
             base = base.filter(F.col("seq") <= as_of)
-        src_state = hist if hist is not None else self.manifest.state
         ns = self._ns_predicate(cf, src_state)
         if ns is not None:
             # applied BEFORE newest-wins/fold: namespaces are disjoint key
@@ -1165,7 +1180,7 @@ class KVStore:
         rt_list = src_state.range_tombstones
         vsegs = src_state.value_segments()
         if bool(src_state.has_merge_operands):
-            is_m = F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
+            is_m = self._is_operand()
             op = self._resolve_merge_op(cf, src_state)
             if op is not None:
                 # operator configured (the FAMILY's effective operator for
@@ -1194,10 +1209,8 @@ class KVStore:
         rt_mask = self._rt_mask(rt_list, as_of)
         if rt_mask is not None:
             live = live.filter(rt_mask)
-        vals = self._values_join_side(vsegs)
         return (
-            live.join(vals, live.value_ptr == vals.value_id, "left")
-            .withColumn("value", F.coalesce(F.col("value"), F.col("big_value")))
+            self._resolve_values(live, vsegs)
             .filter(F.col("value").isNotNull())  # GC'd dangling pointers
             .select("key", "value", "expires_at", "version", "seq")
         )
@@ -1249,17 +1262,11 @@ class KVStore:
         over OPERAND rows only (bounded by un-folded operand count, not by
         store size), one outer join — all key-partitioned; no windows, no
         driver loops. ``fold_merges`` bounds the operand set over time."""
-        newest = self._newest_of(nm)
-        vals = self._values_join_side(vsegs)
-        newest = (
-            newest.join(vals, newest.value_ptr == vals.value_id, "left")
-            .withColumn("value", F.coalesce(F.col("value"), F.col("big_value")))
-            .select("key", "value", "expires_at", "version", "seq")
+        newest = self._resolve_values(self._newest_of(nm), vsegs).select(
+            "key", "value", "expires_at", "version", "seq"
         )
         rt_mask = self._rt_mask(rt_list, as_of)
-        alive = F.col("value").isNotNull() & (
-            (F.col("expires_at") == 0) | (F.col("expires_at") > F.lit(now))
-        )
+        alive = F.col("value").isNotNull() & ~self._expired(now)
         if rt_mask is not None:
             alive = alive & rt_mask
         base = newest.select(
@@ -1272,12 +1279,7 @@ class KVStore:
         ops = m_rows
         if rt_mask is not None:
             ops = ops.filter(rt_mask)
-        above_base = (F.col("version") > F.col("_bv")) | (
-            (F.col("version") == F.col("_bv")) & (F.col("seq") > F.col("_bs"))
-        )
-        ops = ops.join(base.select("key", "_bv", "_bs"), "key", "left").filter(
-            F.col("_bv").isNull() | above_base
-        )
+        ops = self._operands_above(ops, newest)
         if op == "add":
             folded = ops.groupBy("key").agg(
                 F.sum(F.col("value").cast("string").cast("long")).alias("_osum"),
@@ -1346,30 +1348,26 @@ class KVStore:
         (no replanning, no segment scan). ``cf`` scopes the namespace
         (the key must already be ENCODED — ``ColumnFamily.get`` does
         this); CF reads bypass the default-namespace pinned cache."""
-        pinned = self._pinned_view(now, as_of) if cf is None else None
-        if pinned is not None:
-            rows = pinned.filter(F.col("key") == key).limit(1).collect()
-            if not rows:
+        df = self._pinned_view(now, as_of) if cf is None else None
+        if df is None:
+            segs = self.manifest.prune_for_key(self._enc(key))
+            if not segs:
                 return None
-            r = rows[0]
-            key_out = bytes(r["key"]) if self.key_type == "binary" else r["key"]
-            return Entry(key=key_out, value=bytes(r["value"]), expires_at=r["expires_at"], version=r["version"])
-        segs = self.manifest.prune_for_key(self._enc(key))
-        if not segs:
+            df = self.view(now=now, segs=segs, as_of=as_of, cf=cf)
+        rows = df.filter(F.col("key") == key).limit(1).collect()
+        if not rows or rows[0]["value"] is None:  # view() filters NULLs too
             return None
-        rows = (
-            self.view(now=now, segs=segs, as_of=as_of, cf=cf)
-            .filter(F.col("key") == key)
-            .limit(1)
-            .collect()
+        return self._entry(rows[0])
+
+    def _entry(self, r) -> Entry:
+        """A view row as the client-facing ``Entry``."""
+        key = bytes(r["key"]) if self.key_type == "binary" else r["key"]
+        return Entry(
+            key=key,
+            value=bytes(r["value"]),
+            expires_at=r["expires_at"],
+            version=r["version"],
         )
-        if not rows:
-            return None
-        r = rows[0]
-        if r["value"] is None:  # defense-in-depth; view() filters these
-            return None
-        key_out = bytes(r["key"]) if self.key_type == "binary" else r["key"]
-        return Entry(key=key_out, value=bytes(r["value"]), expires_at=r["expires_at"], version=r["version"])
 
     def mget(
         self,
@@ -1385,33 +1383,16 @@ class KVStore:
         (missing/tombstoned/expired keys are absent). ``cf`` as in ``get``."""
         if not keys:
             return {}
-        pinned = self._pinned_view(now, as_of) if cf is None else None
-        if pinned is not None:
-            rows = pinned.filter(F.col("key").isin(list(keys))).collect()
-        else:
-            seg_ids, segs = set(), []
-            for k in keys:
-                for s in self.manifest.prune_for_key(self._enc(k)):
-                    if s.segment_id not in seg_ids:
-                        seg_ids.add(s.segment_id)
-                        segs.append(s)
+        df = self._pinned_view(now, as_of) if cf is None else None
+        if df is None:
+            segs = self._union_segments(
+                self.manifest.prune_for_key(self._enc(k)) for k in keys
+            )
             if not segs:
                 return {}
-            rows = (
-                self.view(now=now, segs=segs, as_of=as_of, cf=cf)
-                .filter(F.col("key").isin(list(keys)))
-                .collect()
-            )
-        out = {}
-        for r in rows:
-            k = bytes(r["key"]) if self.key_type == "binary" else r["key"]
-            out[k] = Entry(
-                key=k,
-                value=bytes(r["value"]),
-                expires_at=r["expires_at"],
-                version=r["version"],
-            )
-        return out
+            df = self.view(now=now, segs=segs, as_of=as_of, cf=cf)
+        rows = df.filter(F.col("key").isin(list(keys))).collect()
+        return {e.key: e for e in map(self._entry, rows)}
 
     def scan(
         self,
@@ -1434,10 +1415,7 @@ class KVStore:
         lo = start if start is not None else prefix
         hi = end
         if prefix is not None and end is None:
-            if self.key_type == "binary":
-                hi = _bytes_prefix_upper_bound(prefix)
-            else:
-                hi = _prefix_upper_bound(prefix)
+            hi = _prefix_upper_bound(prefix)
         hist_segs = (
             self.manifest.load_version(at_version).data_segments()
             if at_version is not None
@@ -1587,11 +1565,11 @@ class KVStore:
         segs = [
             s
             for s in self.manifest.state.data_segments()
-            if (s.max_seq is None or s.max_seq > snapshot_seq)
-            # as-of upper bound: a segment created wholly after the pin
-            # holds nothing visible (same created_seq prune view() uses)
-            and (as_of is None or not s.exact_min_seq or s.created_seq <= as_of)
+            if s.max_seq is None or s.max_seq > snapshot_seq
         ]
+        if as_of is not None:
+            # as-of upper bound: the same created_seq prune view() uses
+            segs = self._visible_at(segs, as_of)
         delta = self.raw_df(segs).filter(F.col("seq") > F.lit(snapshot_seq))
         if as_of is not None:
             delta = delta.filter(F.col("seq") <= F.lit(int(as_of)))
@@ -1600,24 +1578,18 @@ class KVStore:
             # operands ship as their own 'merge' events below — the full
             # events must collapse over FULL rows only, or the newest-per-
             # key pick could ship a raw operand as if it were a full value
-            is_m = F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
+            is_m = self._is_operand()
             m_rows = delta.filter(is_m)
             delta = delta.filter(~is_m)
         newest = self._newest_of(delta)
-        vals = self._values_join_side(self.manifest.state.value_segments())
-        resolved = (
-            newest.join(vals, newest.value_ptr == vals.value_id, "left")
-            .withColumn("value", F.coalesce(F.col("value"), F.col("big_value")))
-        )
+        resolved = self._resolve_values(newest, self.manifest.state.value_segments())
         rts = [
             rt
             for rt in (self.manifest.state.range_tombstones or [])
             if as_of is None or int(rt["seq"]) <= as_of
         ]
         rt_mask = self._rt_mask(rts, None)
-        dead = F.col("value").isNull() | (
-            (F.col("expires_at") != 0) & (F.col("expires_at") <= F.lit(now))
-        )
+        dead = F.col("value").isNull() | self._expired(now)
         if rt_mask is not None:
             # a delta write that a LATER range tombstone covers is dead in
             # the live view — its event must say so
@@ -1648,25 +1620,16 @@ class KVStore:
             # manifest key-interval pruning over the tombstone bounds: the
             # expansion reads only segments overlapping a deleted range,
             # not the whole pre-snapshot store (prune_for_range — the same
-            # pruning scan() uses). Candidates are first gated by the same
-            # created_seq prune view() applies when it picks segments
-            # itself — this is an as-of-snapshot read, so a segment
-            # created wholly after the snapshot holds nothing visible and
-            # passing segs explicitly must not bypass that (ADVICE r7);
-            # the row-level seq filter keeps correctness either way.
-            as_of_cands = [
-                s
-                for s in self.manifest.state.data_segments()
-                if not s.exact_min_seq or s.created_seq <= snapshot_seq
-            ]
-            seg_ids, segs = set(), []
-            for rt in rts_after:
-                for s in self.manifest.prune_for_range(
-                    rt.get("start"), rt.get("end"), as_of_cands
-                ):
-                    if s.segment_id not in seg_ids:
-                        seg_ids.add(s.segment_id)
-                        segs.append(s)
+            # pruning scan() uses). This is an as-of-snapshot read, so the
+            # candidates first pass view()'s as-of prune (`_visible_at`):
+            # passing segs explicitly must not bypass it.
+            as_of_cands = self._visible_at(
+                self.manifest.state.data_segments(), snapshot_seq
+            )
+            segs = self._union_segments(
+                self.manifest.prune_for_range(rt.get("start"), rt.get("end"), as_of_cands)
+                for rt in rts_after
+            )
             if segs:  # no overlapping segment -> nothing was covered
                 extra = (
                     # CF_ALL: a drop_cf tombstone covers CF-namespaced keys,
@@ -1701,17 +1664,8 @@ class KVStore:
             ops = m_rows
             if rt_mask is not None:
                 ops = ops.filter(rt_mask)
-            shadow = newest.select(
-                "key",
-                F.col("version").alias("_bv"),
-                F.col("seq").alias("_bs"),
-            )
-            above = (F.col("version") > F.col("_bv")) | (
-                (F.col("version") == F.col("_bv")) & (F.col("seq") > F.col("_bs"))
-            )
             mev = (
-                ops.join(shadow, "key", "left")
-                .filter(F.col("_bv").isNull() | above)
+                self._operands_above(ops, newest)
                 .select(
                     "key",
                     F.lit("merge").alias("change"),
@@ -2085,12 +2039,16 @@ class KVStore:
         unit every per-CF operation (scan, drop tombstone, compact_cf)
         is keyed by."""
         start = self._cf_prefix(name)
-        end = (
-            _bytes_prefix_upper_bound(start)
-            if self.key_type == "binary"
-            else _prefix_upper_bound(start)
-        )
-        return start, end
+        return start, _prefix_upper_bound(start)
+
+    def _reserved_key(self):
+        """THE reserved-namespace predicate: the key starts with the CF
+        byte (``CF_RESERVED``), i.e. the row belongs to some family."""
+        if self.key_type == "binary":
+            return F.expr("substring(key, 1, 1)") == F.lit(
+                CF_RESERVED.encode("ascii")
+            )
+        return F.col("key").startswith(CF_RESERVED)
 
     def _ns_predicate(self, cf: str | None, src_state):
         """Namespace filter Column for ``view``: None when nothing applies
@@ -2109,14 +2067,9 @@ class KVStore:
                 getattr(src_state, "column_families_ever", False)
             ):
                 return None
-            if self.key_type == "binary":
-                return F.expr("substring(key, 1, 1)") != F.lit(
-                    CF_RESERVED.encode("ascii")
-                )
-            return ~F.col("key").startswith(CF_RESERVED)
-        p = self._cf_prefix(cf)
+            return ~self._reserved_key()
+        p, hi = self._cf_range(cf)
         if self.key_type == "binary":
-            hi = _bytes_prefix_upper_bound(p)
             cond = F.col("key") >= F.lit(bytes(p))
             return cond & (F.col("key") < F.lit(hi)) if hi is not None else cond
         return F.col("key").startswith(p)
@@ -3084,7 +3037,9 @@ class KVStore:
             return {"policy": "leveled", "participants": n, "rounds": 1 if n else 0}
         rounds = self._compact_rounds(
             lambda: self.tiered_buckets_for_range(start, end),
-            lambda bucket: self.compact_tier(bucket, now=now),
+            lambda bucket: self.compact_tier(
+                bucket, now=now, target_segments=target_segments
+            ),
             max_rounds,
         )
         return {"policy": "tiered", "participants": None, "rounds": rounds}
@@ -3197,11 +3152,9 @@ class KVStore:
             # separated payloads into the value column, evaluate ONCE per
             # row, then restore — the written rows keep their original
             # value/value_ptr layout
-            vals = self._values_join_side(state.value_segments())
-            merged = (
-                merged.withColumn("_orig_value", F.col("value"))
-                .join(vals, F.col("value_ptr") == F.col("value_id"), "left")
-                .withColumn("value", F.coalesce(F.col("value"), F.col("big_value")))
+            merged = self._resolve_values(
+                merged.withColumn("_orig_value", F.col("value")),
+                state.value_segments(),
             )
             # NULL-evaluating predicates count as NOT matching: without
             # the coalesce, dead = dead_nat | NULL stays NULL and both
@@ -3214,8 +3167,7 @@ class KVStore:
                 # holds all operands are hold-retained and _protected
                 # stays authoritative — filtering never crosses a
                 # snapshot boundary)
-                is_op = F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
-                exempt = exempt & ~is_op
+                exempt = exempt & ~self._is_operand()
             merged = merged.withColumn(
                 "_elig",
                 F.coalesce(drop_where, F.lit(False)) & ~exempt & ~dead_nat,
@@ -3260,19 +3212,11 @@ class KVStore:
         # rows survive.
         probes: dict = {}
         if state.has_merge_operands:
-            probes["has_merge_operands"] = (
-                F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
-            ).cast("long")
+            probes["has_merge_operands"] = self._is_operand().cast("long")
         if getattr(state, "column_families_ever", False) and not (
             state.column_families or {}
         ):
-            if self.key_type == "binary":
-                resv_pred = F.expr("substring(key, 1, 1)") == F.lit(
-                    CF_RESERVED.encode("ascii")
-                )
-            else:
-                resv_pred = F.col("key").startswith(CF_RESERVED)
-            probes["column_families_ever"] = resv_pred.cast("long")
+            probes["column_families_ever"] = self._reserved_key().cast("long")
         self._rewrite_commit(
             old, merged, self.MAX_LEVEL, target_segments, probes=probes
         )
@@ -3527,7 +3471,7 @@ class KVStore:
             # data-side retention in compact/compact_level
             self._retained_df()
             .filter(F.col("value_ptr").isNotNull())
-            .filter((F.col("expires_at") == 0) | (F.col("expires_at") > F.lit(now if now is not None else int(time.time()))))
+            .filter(~self._expired(int(time.time()) if now is None else now))
             .select(F.col("value_ptr").alias("value_id"))
             .cache()
         )

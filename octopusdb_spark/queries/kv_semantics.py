@@ -158,7 +158,7 @@ def q_kv_value_separation(spark, sf_dir):
     # `big` is the *payload* (large-value) side of the WiscKey split — the
     # majority of the table's bytes. Never force-broadcast it: AQE will
     # broadcast at runtime iff it actually fits (mirrors
-    # KVStore._values_join_side's manifest-gated hint, kv/store.py).
+    # KVStore._resolve_values' manifest-gated hint, kv/store.py).
     joined = main.join(big, main.value_ptr == big.value_id, "left")
     return joined.select(
         "doc_id",

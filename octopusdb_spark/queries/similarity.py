@@ -48,6 +48,16 @@ def _with_norm(df: DataFrame) -> DataFrame:
     return df.withColumn("norm", F.sqrt(_dot(F.col("embedding"), F.col("embedding"))))
 
 
+def _vec_block(nb):
+    """The block (0 .. nb-1) a vector lands in for the block-pair
+    fan-outs: a hash of ``vec_id`` mod ``nb`` (a Column or literal).
+    Membership only has to be a deterministic function of the id;
+    hashing keeps ids that share structure modulo ``nb`` (shard-encoded
+    ids with fixed low bits) from collapsing into one block, which
+    ``pmod(vec_id, nb)`` would do."""
+    return F.pmod(F.xxhash64("vec_id"), nb).cast("int")
+
+
 def rank_centroids(emb: DataFrame, cent: DataFrame, keep=(), with_ct: bool = False) -> DataFrame:
     """THE nearest-centroid ranking rule, shared by every IVF/PQ trainer,
     persistent index build, and one-shot ANN query: broadcast the K-row
@@ -1315,7 +1325,7 @@ def _semdedup_dropped(assigned, thresh: float = SEMDEDUP_THRESH,
         assigned.join(
             F.broadcast(sizes.select("cent_id", nb.alias("_nb"))), "cent_id"
         )
-        .withColumn("_blk", F.pmod("vec_id", F.col("_nb")).cast("int"))
+        .withColumn("_blk", _vec_block(F.col("_nb")))
         .withColumn(
             "_j", F.explode(F.sequence(F.lit(0), F.col("_nb") - F.lit(1)))
         )
@@ -1419,7 +1429,7 @@ def q_dedup_embedding_cosine(spark, sf_dir, n_blocks: int = 4):
     emb = _with_norm(t(spark, sf_dir, "embeddings"))
     B = n_blocks
 
-    blk = F.pmod(F.col("vec_id"), F.lit(B)).cast("int")
+    blk = _vec_block(F.lit(B))
     routes = F.array(
         *[
             F.struct(

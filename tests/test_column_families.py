@@ -42,6 +42,9 @@ def test_cf_namespaces_are_isolated(spark, tmp_path):
         "k1": b"alice",
         "u2": b"bob",
     }
+    # entries carry USER keys, exactly as get returns them
+    assert {k: e.key for k, e in got.items()} == {"k1": "k1", "u2": "u2"}
+    assert users.get("k1", now=NOW).key == "k1"
     rows = users.scan(now=NOW).collect()
     assert [r["key"] for r in rows] == ["k1", "u2"]
     # scan bounds are user-space and stay inside the family
@@ -655,6 +658,25 @@ def test_cf_policy_catalog_and_pre_r13_compat(spark, tmp_path):
     h2 = store3.create_cf("hot", compaction_style="leveled")
     assert h2.compaction_style == "leveled"
     store3.close()
+
+
+def test_compact_cf_tiered_honors_target_segments(spark, tmp_path):
+    """compact_cf on a tiered family passes ``target_segments`` to every
+    tier merge: four same-size runs merged with target_segments=1 leave
+    ONE output segment, not compact_tier's default of 4."""
+    store = KVStore(spark, str(tmp_path / "kv"))
+    hot = store.create_cf("hot", compaction_style="tiered")
+    for b in range(4):
+        hot.set_batch([Entry(f"k{i:03d}", f"b{b}v{i}".encode()) for i in range(40)])
+    before = {s.segment_id for s in store.manifest.state.data_segments()}
+    res = store.compact_cf("hot", now=NOW, target_segments=1)
+    assert res["policy"] == "tiered" and res["rounds"] == 1
+    out = [
+        s for s in store.manifest.state.data_segments()
+        if s.segment_id not in before
+    ]
+    assert len(out) == 1
+    assert _live(hot) == {f"k{i:03d}": f"b3v{i}".encode() for i in range(40)}
 
 
 def test_cf_exist_ok_restates_effective_default(spark, tmp_path):

@@ -348,3 +348,14 @@ def test_facade_merge_surface(spark, tmp_path):
     assert db.info()["has_merge_operands"] is True
     assert db.fold_merges(now=NOW) == 2
     assert db.get("ctr", now=NOW) == b"40"
+
+
+# -------------------------------------------------- bounded facade iterator
+def test_new_iterator_row_cap(spark, tmp_path):
+    db = OctopusDB(spark, str(tmp_path / "db"))
+    db.set_batch([Entry(f"it:{i:03d}", str(i).encode()) for i in range(20)])
+    it = db.new_iterator(prefix="it:", now=NOW)  # under the default cap
+    it.rewind()
+    assert it.valid() and it.item().key == "it:000"
+    with pytest.raises(ValueError, match="max_rows"):
+        db.new_iterator(prefix="it:", now=NOW, max_rows=5)

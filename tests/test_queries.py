@@ -149,11 +149,18 @@ def test_embedding_cosine_handles_sparse_id_blocks(spark, tmp_path):
     cross pair-group with an empty side must contribute nothing (not crash,
     not duplicate the diagonal). Verified against an exact numpy top-20."""
     import numpy as np
+    from pyspark.sql import functions as F
 
-    from octopusdb_spark.queries.similarity import q_dedup_embedding_cosine
+    from octopusdb_spark.queries.similarity import _vec_block, q_dedup_embedding_cosine
 
     rng = np.random.RandomState(7)
-    ids = [i * 2 for i in range(40)]  # only even ids: blocks 1 and 3 empty (B=4)
+    # only ids whose block is 0 or 2: blocks 1 and 3 empty (B=4)
+    cand = spark.range(400).withColumnRenamed("id", "vec_id")
+    ids = sorted(
+        r["vec_id"]
+        for r in cand.filter(_vec_block(F.lit(4)).isin(0, 2)).collect()
+    )[:40]
+    assert len(ids) == 40
     vecs = rng.randn(40, 8).astype("float32")
     rows = [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
     spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(
@@ -174,6 +181,24 @@ def test_embedding_cosine_handles_sparse_id_blocks(spark, tmp_path):
     ]
     want = sorted(pairs, key=lambda p: (-p[2], p[0], p[1]))[:20]
     assert [(a, b) for a, b, _ in got] == [(a, b) for a, b, _ in want]
+
+
+def test_vec_block_spreads_ids_sharing_a_stride(spark):
+    """The block-pair fan-outs (SemDeDup's oversized clusters and the
+    embedding-cosine GEMM) assign blocks by a hash of vec_id: ids that
+    share a stride of nb — shard-encoded ids with fixed low bits — must
+    spread over more than one block, or one task scores them all."""
+    from pyspark.sql import functions as F
+
+    from octopusdb_spark.queries.similarity import _vec_block
+
+    for nb in (2, 4, 7):
+        ids = spark.range(3, 3 + 64 * nb, nb).withColumnRenamed("id", "vec_id")
+        blocks = {
+            r["b"] for r in ids.select(_vec_block(F.lit(nb)).alias("b")).collect()
+        }
+        assert len(blocks) > 1, nb
+        assert blocks <= set(range(nb)), nb
 
 
 def test_driver_priority_window_invariant():

@@ -178,7 +178,7 @@ HINT_ALLOWED_SCOPED = {
         "benchmark shingle set, bounded by benchmark size",
     # KV store sites gated on real manifest metadata before hinting
     ("octopusdb_spark/kv/store.py", "vals"):
-        "_values_join_side: hint emitted only when manifest value-bytes "
+        "_resolve_values: hint emitted only when manifest value-bytes "
         "< BROADCAST_MAX_BYTES",
     ("octopusdb_spark/kv/store.py", "live_ptrs"):
         "gc_values: hint gated on manifest pointer-bytes < BROADCAST_MAX_BYTES",
