@@ -42,7 +42,7 @@ class ColumnFamily:
 
     # -- key codec -----------------------------------------------------------
     def _check(self) -> None:
-        if self.name not in (self.store.manifest.state.column_families or {}):
+        if self.name not in self.store.manifest.state.column_families:
             raise ValueError(
                 f"column family {self.name!r} was dropped (stale handle)"
             )

@@ -20,7 +20,7 @@ import fcntl
 import json
 import os
 import uuid
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 
 
 @dataclass
@@ -80,36 +80,31 @@ class ManifestState:
     # whose segment append + manifest commit landed. foreachBatch is
     # at-least-once; replayed batches are skipped by consulting this map,
     # making the side effect idempotent per (checkpoint, batch_id).
-    # None = "not set by this writer": Manifest.commit inherits the previous
-    # state's map; pass {} explicitly to clear.
-    stream_commits: dict | None = None
+    stream_commits: dict = field(default_factory=dict)
     # Cumulative bytes rewritten by compaction — the write-amplification
     # numerator (amplification = compacted_bytes / live user bytes).
-    # None = inherit from the previous state (same sentinel rule).
-    compacted_bytes: int | None = None
+    compacted_bytes: int = 0
     # Range tombstones (RocksDB/Badger DeleteRange analog): each entry
     # {"start": enc|None, "end": enc|None, "seq": int} hides every row with
     # key in [start, end) and seq <= its stamp. Keys are stored in the
     # manifest-comparable encoding (hex for binary stores — same as
     # min_key/max_key). Bounded: the next full compact() applies them
-    # physically and clears the list. None = inherit (sentinel rule);
-    # [] = deliberate clear.
-    range_tombstones: list | None = None
+    # physically and clears the list.
+    range_tombstones: list = field(default_factory=list)
     # Tracked consumer snapshots (the RocksDB snapshot-list / Badger
     # minReadTs analog): holder name -> held seq. Maintenance consults
     # min(held seqs) before clearing range tombstones: a tombstone some
     # held snapshot still needs (rt seq > min held seq — either for
     # as-of reads at that horizon or for changefeed expansion from it)
-    # survives leveled compaction. Same sentinel rule: None = inherit
-    # from the previous state, {} = deliberate clear.
-    held_snapshots: dict | None = None
+    # survives leveled compaction.
+    held_snapshots: dict = field(default_factory=dict)
     # Merge-operand presence flag (RocksDB kTypeMerge analog): True once
     # any live segment MAY hold rows with BIT_MERGE set. Read and
     # maintenance paths pay the operand-aware plan only while this is
     # set, so stores that never merge keep bit-identical plans. Cleared
     # explicitly (False) by a full compaction that verifies its output
-    # carries no operand rows. Same sentinel rule: None = inherit.
-    has_merge_operands: bool | None = None
+    # carries no operand rows.
+    has_merge_operands: bool = False
     # Writer epoch (fencing token — the Raft-term / HBase-WAL-fencing
     # analog): a monotonically increasing generation number for the
     # replication role this store plays. ``KVStore.promote()`` bumps it
@@ -117,8 +112,7 @@ class ManifestState:
     # stamped with an OLDER epoch (a deposed primary that kept writing —
     # split brain) and adopt newer ones (following a promoted leader).
     # Durable in the manifest so fencing survives handle restarts.
-    # Same sentinel rule: None = inherit from the previous state.
-    writer_epoch: int | None = None
+    writer_epoch: int = 0
     # Column-family catalog (RocksDB CF analog): name -> created_seq.
     # CF rows live in the SAME segment files under a reserved key prefix
     # (\x02<name>\x1f), so flush/compaction/replication are shared;
@@ -126,8 +120,8 @@ class ManifestState:
     # over its prefix — O(1) regardless of row count). Stores that never
     # create a CF keep bit-identical read plans: the default-namespace
     # filter is gated on this catalog (plus the sticky flag below) being
-    # non-empty. Same sentinel rule: None = inherit, {} = deliberate clear.
-    column_families: dict | None = None
+    # non-empty.
+    column_families: dict = field(default_factory=dict)
     # STICKY companion to the catalog (ADVICE r10): True once any CF was
     # ever created, cleared only by a full compaction that VERIFIES no
     # reserved-prefix rows survive (the has_merge_operands pattern). The
@@ -136,8 +130,7 @@ class ManifestState:
     # the LAST drop_cf surface the dropped family's raw \x02 rows in the
     # default namespace (the drop's range tombstone has seq > as_of, so
     # _rt_mask rightly skips it — the namespace filter must still apply).
-    # Same sentinel rule: None = inherit.
-    column_families_ever: bool | None = None
+    column_families_ever: bool = False
 
     def data_segments(self) -> list:
         return [s for s in self.segments if s.kind == "data"]
@@ -190,19 +183,9 @@ class Manifest:
             raise ValueError(f"manifest version {version} does not exist")
         with open(path) as f:
             raw = json.load(f)
-        return ManifestState(
-            version=raw["version"],
-            next_seq=raw["next_seq"],
-            segments=[SegmentInfo(**s) for s in raw["segments"]],
-            stream_commits=raw.get("stream_commits", {}),
-            compacted_bytes=raw.get("compacted_bytes", 0),
-            range_tombstones=raw.get("range_tombstones", []),
-            held_snapshots=raw.get("held_snapshots", {}),
-            has_merge_operands=raw.get("has_merge_operands", False),
-            writer_epoch=raw.get("writer_epoch", 0),
-            column_families=raw.get("column_families", {}),
-            column_families_ever=raw.get("column_families_ever", False),
-        )
+        raw["segments"] = [SegmentInfo(**s) for s in raw["segments"]]
+        # keys an older manifest lacks take the dataclass defaults
+        return ManifestState(**raw)
 
     def versions(self) -> list:
         """All committed manifest versions on disk, ascending."""
@@ -269,11 +252,14 @@ class Manifest:
             "kept_versions": sorted(keep),
         }
 
-    def commit(
-        self, new_state: ManifestState, expected_max_epoch: int | None = None
-    ) -> None:
-        """Write snapshot then atomically swap CURRENT (os.replace is atomic
-        on POSIX) — the analog of manifest AddChanges + rewrite.
+    def commit(self, expected_max_epoch: int | None = None, **changes) -> None:
+        """Commit an EDIT of the current state — the analog of manifest
+        AddChanges (`kv/file/manifest.go:295-324`): ``changes`` names only
+        the ``ManifestState`` fields this commit sets; every other field
+        carries forward from the state current under the commit lock. The
+        new snapshot is written, then CURRENT is atomically swapped
+        (os.replace is atomic on POSIX). Committed states are never
+        mutated: pass fresh lists/dicts, never edit ``state``'s own.
 
         ``expected_max_epoch``: optional fencing assertion, verified under
         the commit lock AFTER the version check — if the authoritative
@@ -308,13 +294,11 @@ class Manifest:
                     "another writer is in flight (commit lock held); retry "
                     "after it finishes or open a fresh KVStore handle"
                 ) from None
-            self._commit_locked(new_state, expected_max_epoch)
+            self._commit_locked(expected_max_epoch, changes)
         finally:
             os.close(lock_fd)  # releases the flock
 
-    def _commit_locked(
-        self, new_state: ManifestState, expected_max_epoch: int | None = None
-    ) -> None:
+    def _commit_locked(self, expected_max_epoch: int | None, changes: dict) -> None:
         cur = self._current_path()
         if os.path.exists(cur):
             with open(cur) as f:
@@ -327,50 +311,17 @@ class Manifest:
         # With CURRENT verified at the base version under the lock,
         # self.state IS the durable state — the fence check here is atomic
         # with the data landing (see EpochFencedError).
-        if (
-            expected_max_epoch is not None
-            and int(self.state.writer_epoch or 0) > int(expected_max_epoch)
+        if expected_max_epoch is not None and self.state.writer_epoch > int(
+            expected_max_epoch
         ):
             raise EpochFencedError(
-                f"writer_epoch advanced to {int(self.state.writer_epoch or 0)} "
+                f"writer_epoch advanced to {self.state.writer_epoch} "
                 f"past the feed's source epoch {int(expected_max_epoch)} while "
                 "this batch was staging (a promote() raced it); the batch is "
                 "refused — re-bootstrap the source as a replica"
             )
-        new_state.version = self.state.version + 1
-        # None = the writer didn't touch the field: carry bookkeeping forward
-        # through commits that rebuild the state from scratch. An explicit
-        # value (including {} / 0) is honored as a deliberate overwrite.
-        if new_state.stream_commits is None:
-            new_state.stream_commits = dict(self.state.stream_commits or {})
-        if new_state.compacted_bytes is None:
-            new_state.compacted_bytes = self.state.compacted_bytes or 0
-        if new_state.range_tombstones is None:
-            new_state.range_tombstones = list(self.state.range_tombstones or [])
-        if new_state.held_snapshots is None:
-            new_state.held_snapshots = dict(self.state.held_snapshots or {})
-        if new_state.has_merge_operands is None:
-            new_state.has_merge_operands = bool(self.state.has_merge_operands)
-        if new_state.writer_epoch is None:
-            new_state.writer_epoch = int(self.state.writer_epoch or 0)
-        if new_state.column_families is None:
-            new_state.column_families = dict(self.state.column_families or {})
-        if new_state.column_families_ever is None:
-            new_state.column_families_ever = bool(self.state.column_families_ever)
+        new_state = replace(self.state, version=self.state.version + 1, **changes)
         snap = os.path.join(self.dir, f"manifest-{new_state.version}.json")
-        payload = {
-            "version": new_state.version,
-            "next_seq": new_state.next_seq,
-            "segments": [asdict(s) for s in new_state.segments],
-            "stream_commits": new_state.stream_commits,
-            "compacted_bytes": new_state.compacted_bytes,
-            "range_tombstones": new_state.range_tombstones,
-            "held_snapshots": new_state.held_snapshots,
-            "has_merge_operands": bool(new_state.has_merge_operands),
-            "writer_epoch": int(new_state.writer_epoch),
-            "column_families": new_state.column_families,
-            "column_families_ever": bool(new_state.column_families_ever),
-        }
         # Under the lock with CURRENT verified at the base version, an
         # existing snapshot for this version can only be a dead claimant's
         # leftover (a live writer would hold the flock): reclaim it.
@@ -380,7 +331,7 @@ class Manifest:
             pass
         fd = os.open(snap, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
         with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
+            json.dump(asdict(new_state), f)
             f.flush()
             os.fsync(f.fileno())
         cur_tmp = self._current_path() + ".tmp"

@@ -59,7 +59,7 @@ import os
 import re
 import threading
 import time
-from dataclasses import dataclass, replace
+from dataclasses import dataclass, fields, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -445,15 +445,11 @@ class KVStore:
         state = self.manifest.state
         seq = state.next_seq
         self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=seq + 1,
-                segments=list(state.segments),
-                range_tombstones=[
-                    *(state.range_tombstones or []),
-                    {"start": self._enc(start), "end": self._enc(end), "seq": seq},
-                ],
-            )
+            next_seq=seq + 1,
+            range_tombstones=[
+                *state.range_tombstones,
+                {"start": self._enc(start), "end": self._enc(end), "seq": seq},
+            ],
         )
         return seq
 
@@ -476,7 +472,7 @@ class KVStore:
         them). The list is bounded (cleared by full compact), so this is
         a literal predicate chain, not a join."""
         conds = []
-        for rt in rts or []:
+        for rt in rts:
             if as_of is not None and int(rt["seq"]) > as_of:
                 continue
             conds.append(
@@ -566,14 +562,7 @@ class KVStore:
                 value = None
             data_rows.append((e.key, value, meta, int(e.expires_at), int(version), seq, value_ptr))
 
-        new_state = ManifestState(
-            version=state.version,
-            next_seq=seq0 + len(entries),
-            segments=list(state.segments),
-            # sentinel rule: None inherits; a batch carrying operands
-            # raises the flag durably (cleared only by a verifying compact)
-            has_merge_operands=True if any_merge else None,
-        )
+        new_segs = []
         if value_rows:
             # same one-slice discipline as the data write below: a driver-
             # held batch writes one file without fanning 32 Python partitions
@@ -582,7 +571,7 @@ class KVStore:
             )
             vdf.write.mode("overwrite").parquet(vpath)
             total_bytes = sum(len(v) for _, v in value_rows)
-            new_state.segments.append(
+            new_segs.append(
                 SegmentInfo(
                     segment_id=vseg_id,
                     kind="values",
@@ -616,7 +605,7 @@ class KVStore:
             .parquet(dpath)
         )
         keys = [r[0] for r in data_rows]
-        new_state.segments.append(
+        new_segs.append(
             SegmentInfo(
                 segment_id=dseg_id,
                 kind="data",
@@ -631,7 +620,13 @@ class KVStore:
                 exact_min_seq=True,
             )
         )
-        self.manifest.commit(new_state)
+        self.manifest.commit(
+            next_seq=seq0 + len(entries),
+            segments=[*state.segments, *new_segs],
+            # a batch carrying operands raises the flag durably (cleared
+            # only by a verifying compact)
+            **({"has_merge_operands": True} if any_merge else {}),
+        )
 
     def ingest_df(
         self,
@@ -700,7 +695,7 @@ class KVStore:
         state = self.manifest.state
         if commit_tag is not None:
             stream_id, batch_id = commit_tag
-            done = (state.stream_commits or {}).get(stream_id)
+            done = state.stream_commits.get(stream_id)
             if done is not None and int(batch_id) <= int(done):
                 return 0  # replayed micro-batch; already committed
         seq0 = state.next_seq
@@ -845,9 +840,9 @@ class KVStore:
                 "vbytes": ptr_len,
             }
             if merge_col:
-                # operand rows must raise the manifest flag durably (the
-                # sentinel rule set_batch follows) — folded into the ranged
-                # write's own stats, no extra scan (ADVICE r9 finding 2)
+                # operand rows must raise the manifest flag durably (as
+                # set_batch does) — folded into the ranged write's own
+                # stats, no extra scan (ADVICE r9 finding 2)
                 extra["mcnt"] = self._is_operand().cast("long")
             new_data_segs, bucket_stats = self._write_ranged_segments(
                 data,
@@ -863,24 +858,22 @@ class KVStore:
             any_merge = bool(merge_col) and any(
                 int(r["mcnt"] or 0) > 0 for r in bucket_stats
             )
-            new_state = ManifestState(
-                version=state.version,
-                next_seq=int(max(r["_mxseq"] for r in bucket_stats)) + 1,
-                segments=list(state.segments),
-                stream_commits=dict(state.stream_commits or {}),
-                # sentinel rule: None inherits; any ingested operand raises
-                # the flag durably (cleared only by a verifying compact)
-                has_merge_operands=True if any_merge else None,
-            )
+            changes = {}
             if commit_tag is not None:
-                new_state.stream_commits[commit_tag[0]] = int(commit_tag[1])
-
+                changes["stream_commits"] = {
+                    **state.stream_commits, commit_tag[0]: int(commit_tag[1])
+                }
+            if any_merge:
+                # any ingested operand raises the flag durably (cleared
+                # only by a verifying compact)
+                changes["has_merge_operands"] = True
+            new_vsegs = []
             if vcnt:
                 big = staged.filter(F.col("value_ptr").isNotNull()).select(
                     F.col("value_ptr").alias("value_id"), F.col("value").alias("big_value")
                 )
                 big.write.mode("overwrite").parquet(vpath)
-                new_state.segments.append(
+                new_vsegs.append(
                     SegmentInfo(
                         segment_id=vseg_id,
                         kind="values",
@@ -895,8 +888,12 @@ class KVStore:
                     )
                 )
 
-            new_state.segments.extend(new_data_segs)
-            self.manifest.commit(new_state, expected_max_epoch=expected_max_epoch)
+            self.manifest.commit(
+                expected_max_epoch=expected_max_epoch,
+                next_seq=int(max(r["_mxseq"] for r in bucket_stats)) + 1,
+                segments=[*state.segments, *new_vsegs, *new_data_segs],
+                **changes,
+            )
             return int(total_cnt)
         finally:
             # Both table writes have landed (or failed) by now, so the frozen
@@ -982,15 +979,13 @@ class KVStore:
         Stores whose manifest flag is unset take none of these branches —
         their plans are bit-identical to the pre-merge engine."""
         raw = self.raw_df(segs)
-        merge_aware = bool(self.manifest.state.has_merge_operands)
+        merge_aware = self.manifest.state.has_merge_operands
         if merge_aware:
             is_m = self._is_operand()
             m_rows, nm = raw.filter(is_m), raw.filter(~is_m)
         else:
             m_rows, nm = None, raw
-        held = sorted(
-            {int(v) for v in (self.manifest.state.held_snapshots or {}).values()}
-        )
+        held = sorted({int(v) for v in self.manifest.state.held_snapshots.values()})
         if not held:
             out = self._newest_of(nm)
             kept_m = None
@@ -1166,8 +1161,8 @@ class KVStore:
         )
         if segs is None:
             segs = src_state.data_segments()
-            if as_of is not None:
-                segs = self._visible_at(segs, as_of)
+        if as_of is not None:
+            segs = self._visible_at(segs, as_of)
         base = self.raw_df(segs)
         if as_of is not None:
             base = base.filter(F.col("seq") <= as_of)
@@ -1179,7 +1174,7 @@ class KVStore:
             base = base.filter(ns)
         rt_list = src_state.range_tombstones
         vsegs = src_state.value_segments()
-        if bool(src_state.has_merge_operands):
+        if src_state.has_merge_operands:
             is_m = self._is_operand()
             op = self._resolve_merge_op(cf, src_state)
             if op is not None:
@@ -1225,7 +1220,7 @@ class KVStore:
         family's effective op differs — one fold plan cannot be right for
         two operators, and a loud error beats a silently mis-folded
         pre-image. Heterogeneous-op stores read/fold per family."""
-        families = src_state.column_families or {}
+        families = src_state.column_families
         if cf is None or not families:
             return self.merge_op
         if cf == CF_ALL:
@@ -1549,7 +1544,7 @@ class KVStore:
             raise ValueError(
                 f"as_of ({as_of}) must be >= snapshot_seq ({snapshot_seq})"
             )
-        merge_aware = bool(self.manifest.state.has_merge_operands)
+        merge_aware = self.manifest.state.has_merge_operands
         if merge_aware and self.merge_op is None:
             # the range-delete expansion below reads the as-of view; on an
             # operand-bearing store that view only surfaces operand-built
@@ -1585,7 +1580,7 @@ class KVStore:
         resolved = self._resolve_values(newest, self.manifest.state.value_segments())
         rts = [
             rt
-            for rt in (self.manifest.state.range_tombstones or [])
+            for rt in self.manifest.state.range_tombstones
             if as_of is None or int(rt["seq"]) <= as_of
         ]
         rt_mask = self._rt_mask(rts, None)
@@ -1620,9 +1615,9 @@ class KVStore:
             # manifest key-interval pruning over the tombstone bounds: the
             # expansion reads only segments overlapping a deleted range,
             # not the whole pre-snapshot store (prune_for_range — the same
-            # pruning scan() uses). This is an as-of-snapshot read, so the
-            # candidates first pass view()'s as-of prune (`_visible_at`):
-            # passing segs explicitly must not bypass it.
+            # pruning scan() uses). This is an as-of-snapshot read: the
+            # candidates pass view()'s as-of prune (`_visible_at`) first, so
+            # a range no pre-snapshot segment overlaps skips the expansion.
             as_of_cands = self._visible_at(
                 self.manifest.state.data_segments(), snapshot_seq
             )
@@ -1931,36 +1926,22 @@ class KVStore:
         release them — an abandoned hold pins tombstones forever, the
         same trade as any MVCC retention handle."""
         seq = self.snapshot_seq() if seq is None else int(seq)
-        state = self.manifest.state
-        self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=list(state.segments),
-                held_snapshots={**(state.held_snapshots or {}), str(holder): seq},
-            )
-        )
+        held = self.manifest.state.held_snapshots
+        self.manifest.commit(held_snapshots={**held, str(holder): seq})
         return seq
 
     def release_snapshot(self, holder: str) -> None:
         """Drop a named hold; unknown names are a no-op (idempotent)."""
-        state = self.manifest.state
-        held = dict(state.held_snapshots or {})
+        held = self.manifest.state.held_snapshots
         if str(holder) not in held:
             return
-        del held[str(holder)]
         self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=list(state.segments),
-                held_snapshots=held,
-            )
+            held_snapshots={h: s for h, s in held.items() if h != str(holder)}
         )
 
     def oldest_held_seq(self) -> int | None:
         """min over registered holds, or None when nothing is held."""
-        held = self.manifest.state.held_snapshots or {}
+        held = self.manifest.state.held_snapshots
         return min(held.values()) if held else None
 
     def replication_lag(self) -> dict:
@@ -1974,7 +1955,7 @@ class KVStore:
         (``oldest_held_seq``). Served remotely via the service ``stats``
         op so a failover drill can assert lag bounds over the socket."""
         head = self.snapshot_seq()
-        holds = self.manifest.state.held_snapshots or {}
+        holds = self.manifest.state.held_snapshots
         per = {h: head - int(s) for h, s in sorted(holds.items())}
         return {
             "head_seq": head,
@@ -1989,7 +1970,7 @@ class KVStore:
         """Fencing token for the replication role (Raft-term analog): the
         generation stamped on every feed this store ships. Bumped by
         ``promote()``; consumers refuse older stamps (``apply_changes``)."""
-        return int(self.manifest.state.writer_epoch or 0)
+        return self.manifest.state.writer_epoch
 
     def promote(self, past_epoch: int | None = None) -> int:
         """Promote this store to primary after a failover: bump the durable
@@ -2002,15 +1983,7 @@ class KVStore:
         ELECTION (deciding who calls promote) stays out of scope, matching
         the reference's empty cluster layer (`cmd/main.go:3-4`)."""
         new_epoch = max(self.writer_epoch, int(past_epoch or 0)) + 1
-        state = self.manifest.state
-        self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=list(state.segments),
-                writer_epoch=new_epoch,
-            )
-        )
+        self.manifest.commit(writer_epoch=new_epoch)
         return new_epoch
 
     def _adopt_epoch(self, source_epoch: int) -> None:
@@ -2019,15 +1992,7 @@ class KVStore:
         source is not ahead."""
         if int(source_epoch) <= self.writer_epoch:
             return
-        state = self.manifest.state
-        self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=list(state.segments),
-                writer_epoch=int(source_epoch),
-            )
-        )
+        self.manifest.commit(writer_epoch=int(source_epoch))
 
     # -- column families (RocksDB CF analog; beyond-reference) ---------------
     def _cf_prefix(self, name: str):
@@ -2063,9 +2028,7 @@ class KVStore:
             # the sticky flag the dropped family's raw \x02 rows would
             # surface in the default namespace. Cleared only by a full
             # compaction that verifies no reserved-prefix rows survive.
-            if not (src_state.column_families or {}) and not bool(
-                getattr(src_state, "column_families_ever", False)
-            ):
+            if not src_state.column_families and not src_state.column_families_ever:
                 return None
             return ~self._reserved_key()
         p, hi = self._cf_range(cf)
@@ -2101,7 +2064,7 @@ class KVStore:
     def _cf_effective(self, name: str) -> dict:
         """The family's EFFECTIVE options (recorded override or the store
         default for each): compaction_style, value_threshold, merge_op."""
-        cfs = self.manifest.state.column_families or {}
+        cfs = self.manifest.state.column_families
         if str(name) not in cfs:
             raise ValueError(f"unknown column family {name!r}")
         meta = self._cf_meta(cfs[str(name)])
@@ -2129,7 +2092,7 @@ class KVStore:
     def cf_compaction_style(self, name: str) -> str:
         """The family's effective compaction policy: its recorded style,
         else the store default."""
-        cfs = self.manifest.state.column_families or {}
+        cfs = self.manifest.state.column_families
         if str(name) not in cfs:
             raise ValueError(f"unknown column family {name!r}")
         style = self._cf_meta(cfs[str(name)])["compaction_style"]
@@ -2186,7 +2149,7 @@ class KVStore:
             )
         if value_threshold is not None and int(value_threshold) < 1:
             raise ValueError("cf value_threshold must be a positive int")
-        cfs = dict(self.manifest.state.column_families or {})
+        cfs = self.manifest.state.column_families
         if name in cfs:
             if exist_ok:
                 # compare against the family's EFFECTIVE options (recorded
@@ -2209,9 +2172,8 @@ class KVStore:
                         )
                 return self.cf(name)
             raise ValueError(f"column family {name!r} already exists")
-        state = self.manifest.state
-        cfs[name] = {
-            "seq": int(state.next_seq),
+        entry = {
+            "seq": int(self.manifest.state.next_seq),
             "compaction_style": compaction_style,
             "value_threshold": (
                 None if value_threshold is None else int(value_threshold)
@@ -2219,16 +2181,11 @@ class KVStore:
             "merge_op": merge_op,
         }
         self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=list(state.segments),
-                column_families=cfs,
-                # sticky: keeps the default-namespace filter correct for
-                # as_of reads even after the last drop_cf (see
-                # _ns_predicate); cleared only by a verifying compact()
-                column_families_ever=True,
-            )
+            column_families={**cfs, name: entry},
+            # sticky: keeps the default-namespace filter correct for
+            # as_of reads even after the last drop_cf (see
+            # _ns_predicate); cleared only by a verifying compact()
+            column_families_ever=True,
         )
         return self.cf(name)
 
@@ -2238,13 +2195,13 @@ class KVStore:
         a stale handle can't write into a dropped family's key range)."""
         from octopusdb_spark.kv.column_family import ColumnFamily
 
-        if str(name) not in (self.manifest.state.column_families or {}):
+        if str(name) not in self.manifest.state.column_families:
             raise ValueError(f"unknown column family {name!r}")
         return ColumnFamily(self, str(name))
 
     def list_cfs(self) -> list:
         """Registered column-family names, sorted."""
-        return sorted(self.manifest.state.column_families or {})
+        return sorted(self.manifest.state.column_families)
 
     def drop_cf(self, name: str) -> int:
         """Drop a column family — O(1) regardless of its row count, in ONE
@@ -2257,23 +2214,19 @@ class KVStore:
         semantics). Returns the tombstone's seq stamp."""
         name = str(name)
         state = self.manifest.state
-        cfs = dict(state.column_families or {})
-        if name not in cfs:
+        if name not in state.column_families:
             raise ValueError(f"unknown column family {name!r}")
-        del cfs[name]
         start, end = self._cf_range(name)
         seq = state.next_seq
         self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=seq + 1,
-                segments=list(state.segments),
-                range_tombstones=[
-                    *(state.range_tombstones or []),
-                    {"start": self._enc(start), "end": self._enc(end), "seq": seq},
-                ],
-                column_families=cfs,
-            )
+            next_seq=seq + 1,
+            range_tombstones=[
+                *state.range_tombstones,
+                {"start": self._enc(start), "end": self._enc(end), "seq": seq},
+            ],
+            column_families={
+                n: v for n, v in state.column_families.items() if n != name
+            },
         )
         return seq
 
@@ -2328,21 +2281,21 @@ class KVStore:
             "row_count": sum(s.row_count for s in st.data_segments()),
             "value_total_bytes": sum(s.total_value_bytes for s in st.value_segments()),
             "value_discard_bytes": sum(s.discard_bytes for s in st.value_segments()),
-            "compacted_bytes": st.compacted_bytes or 0,
-            "write_amplification": round((st.compacted_bytes or 0) / live_bytes, 3)
+            "compacted_bytes": st.compacted_bytes,
+            "write_amplification": round(st.compacted_bytes / live_bytes, 3)
             if live_bytes
             else 0.0,
             # operational visibility for the two bounded-but-growable
             # manifest lists (ADVICE r7): every read applies one predicate
             # per live range tombstone, and every hold pins tombstones
-            "range_tombstones": len(st.range_tombstones or []),
-            "held_snapshots": len(st.held_snapshots or {}),
-            "has_merge_operands": bool(st.has_merge_operands),
-            "writer_epoch": int(st.writer_epoch or 0),
-            "column_families": sorted(st.column_families or {}),
+            "range_tombstones": len(st.range_tombstones),
+            "held_snapshots": len(st.held_snapshots),
+            "has_merge_operands": st.has_merge_operands,
+            "writer_epoch": st.writer_epoch,
+            "column_families": sorted(st.column_families),
             "column_family_styles": {
                 n: self._cf_meta(v)["compaction_style"] or self.compaction_style
-                for n, v in sorted((st.column_families or {}).items())
+                for n, v in sorted(st.column_families.items())
             },
             # the rest of the per-CF options contract (r14): effective
             # value-separation threshold + merge operator per family
@@ -2355,13 +2308,11 @@ class KVStore:
                     ),
                     "merge_op": self._cf_meta(v)["merge_op"] or self.merge_op,
                 }
-                for n, v in sorted((st.column_families or {}).items())
+                for n, v in sorted(st.column_families.items())
             },
             # sticky namespace gate (r11): True while any reserved-prefix
             # rows may exist — mirrors has_merge_operands' lifecycle
-            "column_families_ever": bool(
-                getattr(st, "column_families_ever", False)
-            ),
+            "column_families_ever": st.column_families_ever,
         }
 
     def fold_merges(
@@ -2412,7 +2363,7 @@ class KVStore:
             # differs (review r15: the same misrouting the r14 ADVICE
             # fixed for cf-scoped folds, on the CF_ALL path; mirrors
             # the heterogeneous-merge-op refusal)
-            cfs = self.manifest.state.column_families or {}
+            cfs = self.manifest.state.column_families
             odd = sorted(
                 n for n in cfs
                 if self.cf_value_threshold(n) != self.value_threshold
@@ -2424,7 +2375,7 @@ class KVStore:
                     "from the store default) — fold each family via "
                     "cf.fold_merges() / fold_merges(cf=...)"
                 )
-        if not bool(self.manifest.state.has_merge_operands):
+        if not self.manifest.state.has_merge_operands:
             return 0
         now = int(time.time()) if now is None else now
         # The view's merge fold already knows, per key, whether any
@@ -2827,7 +2778,7 @@ class KVStore:
         part_ids = {s.segment_id for s in participants}
         kept = [s for s in state.segments if s.segment_id not in part_ids]
         kept_data = [s for s in kept if s.kind == "data"]
-        rts = state.range_tombstones or []
+        rts = state.range_tombstones
         min_held = self.oldest_held_seq()
         applied, cleared = [], []
         for rt in rts:
@@ -2846,15 +2797,11 @@ class KVStore:
         )
         drops = self._dropped_ptr_bytes(participants, new_segs)
         self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=self._with_discard_updates(kept, drops) + new_segs,
-                compacted_bytes=(state.compacted_bytes or 0)
-                + sum(s.size_bytes for s in new_segs),
-                range_tombstones=[rt for rt in rts if rt not in cleared],
-                **{f: any(int(r[f] or 0) for r in rows) for f in probes or {}},
-            )
+            segments=self._with_discard_updates(kept, drops) + new_segs,
+            compacted_bytes=state.compacted_bytes
+            + sum(s.size_bytes for s in new_segs),
+            range_tombstones=[rt for rt in rts if rt not in cleared],
+            **{f: any(int(r[f] or 0) for r in rows) for f in probes or {}},
         )
 
     @staticmethod
@@ -3213,9 +3160,7 @@ class KVStore:
         probes: dict = {}
         if state.has_merge_operands:
             probes["has_merge_operands"] = self._is_operand().cast("long")
-        if getattr(state, "column_families_ever", False) and not (
-            state.column_families or {}
-        ):
+        if state.column_families_ever and not state.column_families:
             probes["column_families_ever"] = self._reserved_key().cast("long")
         self._rewrite_commit(
             old, merged, self.MAX_LEVEL, target_segments, probes=probes
@@ -3288,41 +3233,21 @@ class KVStore:
             key_type=self.key_type,
             merge_op=self.merge_op,
         )
-        clone.manifest.commit(
-            ManifestState(
-                version=clone.manifest.state.version,
-                next_seq=state.next_seq,
+        # every field of the source state carries over — tombstones, holds,
+        # flags, epoch and CF catalog are all part of the table — with the
+        # segments relocated; the clone's own version numbering restarts
+        try:
+            clone.manifest.commit(
+                **{
+                    f.name: getattr(state, f.name)
+                    for f in fields(ManifestState)
+                    if f.name not in ("version", "segments")
+                },
                 segments=new_segments,
-                stream_commits=dict(state.stream_commits or {}),
-                compacted_bytes=state.compacted_bytes or 0,
-                # pending range tombstones are part of the cloned state:
-                # without them, range-deleted keys resurrect in every
-                # backup/replica bootstrapped while a tombstone is live
-                # (the sentinel would inherit the clone's EMPTY list)
-                range_tombstones=list(state.range_tombstones or []),
-                # consumer resume-point holds too: a restored primary with
-                # an empty hold map would treat every range tombstone as
-                # clearable on its first maintenance tick and strand the
-                # CDC consumers the holds were protecting
-                held_snapshots=dict(state.held_snapshots or {}),
-                # explicit, not sentinel: the clone's fresh manifest would
-                # inherit False and its maintenance would trim operand
-                # rows as ordinary versions
-                has_merge_operands=bool(state.has_merge_operands),
-                # the epoch is part of the replicated state: a replica
-                # bootstrapped at epoch E must refuse feeds below E, and
-                # promote() fences relative to the inherited value
-                writer_epoch=int(state.writer_epoch or 0),
-                # CF catalog is table metadata: a clone must serve the same
-                # families (and keep filtering its default namespace) —
-                # including the sticky ever-flag, or a clone taken after
-                # the last drop_cf would resurface \x02 rows on as_of reads
-                column_families=dict(state.column_families or {}),
-                column_families_ever=bool(
-                    getattr(state, "column_families_ever", False)
-                ),
             )
-        )
+        except BaseException:
+            clone.close()  # a failed clone must not keep dest_root locked
+            raise
         return clone
 
     def prune_history(self, keep_versions: int = 2) -> dict:
@@ -3428,11 +3353,7 @@ class KVStore:
             aliases=sorted({a for s in vsegs for a in (*s.aliases, s.segment_id)}),
         )
         self.manifest.commit(
-            ManifestState(
-                version=state.version,
-                next_seq=state.next_seq,
-                segments=[s for s in state.segments if s.kind != "values"] + [new_seg],
-            )
+            segments=[s for s in state.segments if s.kind != "values"] + [new_seg]
         )
         return len(vsegs)
 
@@ -3576,7 +3497,5 @@ class KVStore:
         if rewritten or stats_refined:
             # committing refinements matters even with no rewrites: without
             # them the next bootstrap-mode call re-scans every clean segment
-            self.manifest.commit(
-                ManifestState(version=state.version, next_seq=state.next_seq, segments=new_segments)
-            )
+            self.manifest.commit(segments=new_segments)
         return rewritten

@@ -86,7 +86,7 @@ def stream_ingest_with_replication(
             commit_tag=(checkpoint_dir, int(batch_id)),
             merge_col="_merge_flag" if merge_col is not None else None,
         )
-        resume = int((primary.manifest.state.held_snapshots or {}).get(holder, 0))
+        resume = int(primary.manifest.state.held_snapshots.get(holder, 0))
         shipped_to = primary.snapshot_seq()
         # pin the ship to (resume, shipped_to]: the hold below advances to
         # exactly the interval that was applied, even if another commit

@@ -79,7 +79,7 @@ class ContinuousRollup:
         result — and commits a new snapshot. Returns rows in the batch."""
         state = self.manifest.state
         if commit_tag is not None:
-            done = (state.stream_commits or {}).get(commit_tag[0])
+            done = state.stream_commits.get(commit_tag[0])
             if done is not None and int(commit_tag[1]) <= int(done):
                 return 0
         bucket = (
@@ -134,8 +134,12 @@ class ContinuousRollup:
             .agg(F.count("*").alias("cnt"), F.sum("n_events").alias("tot"))
             .collect()[0]
         )
-        new_state = ManifestState(
-            version=state.version,
+        changes = {}
+        if commit_tag is not None:
+            changes["stream_commits"] = {
+                **state.stream_commits, commit_tag[0]: int(commit_tag[1])
+            }
+        self.manifest.commit(
             next_seq=state.next_seq + 1,
             segments=[
                 SegmentInfo(
@@ -150,11 +154,8 @@ class ContinuousRollup:
                     created_seq=state.next_seq,
                 )
             ],
-            stream_commits=dict(state.stream_commits or {}),
+            **changes,
         )
-        if commit_tag is not None:
-            new_state.stream_commits[commit_tag[0]] = int(commit_tag[1])
-        self.manifest.commit(new_state)
         return int(n_batch)
 
 

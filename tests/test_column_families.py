@@ -541,18 +541,8 @@ def test_apply_changes_fencing_is_atomic_with_commit(spark, tmp_path):
     with pytest.raises(StaleWriterError):
         replica.apply_changes(feed, source_epoch=src_epoch)
     # and the low-level primitive raises EpochFencedError on its own
-    st = replica.manifest.state
-    from octopusdb_spark.kv.manifest import ManifestState
-
     with pytest.raises(EpochFencedError):
-        replica.manifest.commit(
-            ManifestState(
-                version=st.version,
-                next_seq=st.next_seq,
-                segments=list(st.segments),
-            ),
-            expected_max_epoch=src_epoch,
-        )
+        replica.manifest.commit(expected_max_epoch=src_epoch)
     # nothing landed on the replica beyond the bootstrap clone
     assert _live(replica) == {"k1": b"v1", "k2": b"v2"}
 
@@ -804,3 +794,65 @@ def F_col_meta_merge():
     from octopusdb_spark.kv.store import BIT_MERGE
 
     return F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) != 0
+
+
+def test_cf_scoped_fold_respects_family_threshold(spark, tmp_path):
+    """A fold on a family with a LARGER threshold than the store default
+    must keep the folded value inline (ADVICE r14: it was routed with
+    the store default and pushed to the values table)."""
+    from octopusdb_spark.kv.store import BIT_MERGE
+    from pyspark.sql import functions as F
+
+    store = KVStore(spark, str(tmp_path / "foldthr"),
+                    value_threshold=16, merge_op="append")
+    big = store.create_cf("big", value_threshold=1024)
+    big.set(Entry("k", b"v" * 8))
+    big.merge("k", b"w" * 12)
+    big.merge("k", b"x" * 12)
+    folded_val = b"v" * 8 + b"," + b"w" * 12 + b"," + b"x" * 12  # 34 > 16
+    assert big.fold_merges(now=10**15) == 1
+    assert big.get("k", now=10**15).value == folded_val
+
+    rows = (
+        store.raw_df()
+        .filter(
+            (F.col("key") == F.lit(big._k("k")))
+            & (F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) == 0)
+        )
+        .orderBy(F.col("seq").desc())
+        .select("value", "value_ptr")
+        .collect()
+    )
+    newest = rows[0]
+    assert newest["value_ptr"] is None  # inline under the FAMILY threshold
+    assert bytes(newest["value"]) == folded_val
+    store.close()
+
+
+def test_cross_namespace_fold_refuses_on_threshold_mismatch(spark, tmp_path):
+    """Review r15: a CF_ALL fold cannot honor per-family value
+    thresholds — it must refuse loudly (mirroring the heterogeneous
+    merge-op refusal) instead of routing every family's folded values
+    with the store default."""
+    store = KVStore(spark, str(tmp_path / "foldall"),
+                    value_threshold=16, merge_op="append")
+    big = store.create_cf("big", value_threshold=1024)
+    store.set(Entry("s", b"a"))
+    store.merge("s", b"b")
+    big.set(Entry("k", b"v"))
+    big.merge("k", b"w")
+    with pytest.raises(ValueError, match="per-family value thresholds"):
+        store.fold_merges(now=10**15)
+    # the per-family paths still work
+    assert big.fold_merges(now=10**15) == 1
+    assert big.get("k", now=10**15).value == b"v,w"
+    # a same-threshold family does NOT block the cross-namespace fold
+    store2 = KVStore(spark, str(tmp_path / "foldall2"),
+                     value_threshold=16, merge_op="append")
+    store2.create_cf("same")  # inherits the store threshold
+    store2.set(Entry("s", b"a"))
+    store2.merge("s", b"b")
+    assert store2.fold_merges(now=10**15) == 1
+    assert store2.get("s", now=10**15).value == b"a,b"
+    store.close()
+    store2.close()

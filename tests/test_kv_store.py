@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from octopusdb_spark.kv import Entry, KVStore
 from octopusdb_spark.kv.manifest import Manifest, ManifestConflictError, ManifestState
-from octopusdb_spark.kv.store import _prefix_upper_bound
+from octopusdb_spark.kv.store import CF_ALL, _prefix_upper_bound
 
 NOW = 2_000_000_000
 
@@ -278,10 +278,26 @@ def test_compact_level_preserves_tombstones(store):
 
 
 def test_reopen_recovers_from_manifest(store, spark):
+    import json
+
     store.set_batch([Entry("persist", b"me")])
     reopened = KVStore(spark, store.root)
     assert reopened.get("persist", now=NOW).value == b"me"
     assert reopened.manifest.state.next_seq == store.manifest.state.next_seq
+    # a snapshot from before the bookkeeping fields existed holds only
+    # version, next_seq and segments: the rest load as the defaults
+    snap = os.path.join(store.manifest.dir, f"manifest-{store.manifest.state.version}.json")
+    with open(snap) as f:
+        raw = json.load(f)
+    with open(snap, "w") as f:
+        json.dump({k: raw[k] for k in ("version", "next_seq", "segments")}, f)
+    legacy = KVStore(spark, store.root)
+    assert legacy.manifest.state == ManifestState(
+        version=raw["version"],
+        next_seq=raw["next_seq"],
+        segments=store.manifest.state.segments,
+    )
+    assert legacy.get("persist", now=NOW).value == b"me"
 
 
 def test_reopen_after_torn_commit(store, spark):
@@ -344,6 +360,22 @@ def test_as_of_snapshot_reads(store):
     # as_of=0 predates every write -> empty view
     assert store.view(now=NOW, as_of=0).count() == 0
 
+
+
+def test_scan_as_of_skips_segments_created_after_snapshot(store):
+    """An as-of scan prunes segments created wholly after the snapshot,
+    as view() does: scan passes its range-pruned segments explicitly, and
+    the prune must not be bypassed for them."""
+    store.set_batch([Entry("p1", b"a")])
+    old_path = store.manifest.state.data_segments()[-1].path
+    snap = store.snapshot_seq()
+    store.set_batch([Entry("p2", b"b")])
+    new_path = store.manifest.state.data_segments()[-1].path
+    df = store.scan(prefix="p", now=NOW, as_of=snap)
+    files = df.inputFiles()
+    assert any(old_path in f for f in files)
+    assert not any(new_path in f for f in files)
+    assert [r["key"] for r in df.collect()] == ["p1"]
 
 def test_as_of_horizon_after_compaction(store):
     store.set_batch([Entry("k", b"old")])
@@ -435,7 +467,7 @@ def test_as_of_does_not_trust_laundered_stamps_even_with_exact_max_seq(store):
     where old manifests live on (durable pre-images resolve there)."""
     from dataclasses import asdict
 
-    from octopusdb_spark.kv.manifest import ManifestState, SegmentInfo
+    from octopusdb_spark.kv.manifest import SegmentInfo
 
     store.set_batch([Entry("a", b"v1"), Entry("b", b"b1")])
     snap = store.snapshot_seq()
@@ -452,13 +484,7 @@ def test_as_of_does_not_trust_laundered_stamps_even_with_exact_max_seq(store):
             d["created_seq"] = laundered
             d["exact_min_seq"] = False
         segs.append(SegmentInfo(**d))
-    store.manifest.commit(
-        ManifestState(
-            version=store.manifest.state.version,
-            next_seq=store.manifest.state.next_seq,
-            segments=segs,
-        )
-    )
+    store.manifest.commit(segments=segs)
     hist_version = store.manifest.state.version
     # live path: pruning on the laundered stamp would drop key `b`
     got = store.get("b", now=NOW, as_of=snap)
@@ -2648,7 +2674,7 @@ def test_manifest_commit_recovers_orphan_and_detects_conflict(tmp_path):
     import fcntl
 
     m = Manifest(str(tmp_path / "t"))
-    m.commit(ManifestState(version=0, next_seq=1, segments=[]))
+    m.commit(next_seq=1, segments=[])
     # crash orphan: manifest-2.json exists (even partial) but CURRENT is 1
     orphan = os.path.join(m.dir, "manifest-2.json")
     with open(orphan, "w") as f:
@@ -2657,26 +2683,26 @@ def test_manifest_commit_recovers_orphan_and_detects_conflict(tmp_path):
     holder = os.open(os.path.join(m.dir, "LOCK"), os.O_CREAT | os.O_RDWR)
     fcntl.flock(holder, fcntl.LOCK_EX)
     with pytest.raises(ManifestConflictError, match="in flight"):
-        m.commit(ManifestState(version=0, next_seq=2, segments=[]))
+        m.commit(next_seq=2, segments=[])
     # the claimant died: lock released, orphan reclaimed immediately
     os.close(holder)
-    m.commit(ManifestState(version=0, next_seq=2, segments=[]))  # recovers
+    m.commit(next_seq=2, segments=[])  # recovers
     assert m.state.version == 2
     reloaded = Manifest(str(tmp_path / "t"))
     assert reloaded.state.next_seq == 2  # the recovered commit is readable
     # true conflict: CURRENT advanced underneath a stale handle
     stale = Manifest(str(tmp_path / "t"))
-    m.commit(ManifestState(version=0, next_seq=3, segments=[]))
+    m.commit(next_seq=3, segments=[])
     with pytest.raises(ManifestConflictError):
-        stale.commit(ManifestState(version=0, next_seq=9, segments=[]))
+        stale.commit(next_seq=9, segments=[])
 
 
 def test_manifest_orphan_is_swept_not_loaded(tmp_path):
     """prune_versions must never parse claim-orphans past CURRENT (they may
     be partial JSON) — it deletes them."""
     m = Manifest(str(tmp_path / "t2"))
-    m.commit(ManifestState(version=0, next_seq=1, segments=[]))
-    m.commit(ManifestState(version=0, next_seq=2, segments=[]))
+    m.commit(next_seq=1, segments=[])
+    m.commit(next_seq=2, segments=[])
     orphan = os.path.join(m.dir, "manifest-9.json")
     with open(orphan, "w") as f:
         f.write('{"version"')
@@ -2684,6 +2710,86 @@ def test_manifest_orphan_is_swept_not_loaded(tmp_path):
     assert 9 in report["removed_versions"]
     assert not os.path.exists(orphan)
     assert m.state.version == 2
+
+
+# Every mutating op ends in one manifest commit; each entry makes exactly
+# one commit on the base store built by _commit_base.
+_COMMIT_OPS = {
+    "set_batch": lambda s, dst: s.set_batch([Entry("n", b"new")]),
+    "ingest_df": lambda s, dst: s.ingest_df(
+        s.spark.createDataFrame([("n", b"new")], "key string, value binary")
+    ),
+    "delete_range": lambda s, dst: s.delete_range("a", "b"),
+    "hold_snapshot": lambda s, dst: s.hold_snapshot("h2"),
+    "release_snapshot": lambda s, dst: s.release_snapshot("h"),
+    "promote": lambda s, dst: s.promote(),
+    "create_cf": lambda s, dst: s.create_cf("fam2"),
+    "drop_cf": lambda s, dst: s.drop_cf("fam"),
+    "compact": lambda s, dst: s.compact(now=NOW),
+    "compact_level": lambda s, dst: s.compact_level(0, now=NOW),
+    "compact_values": lambda s, dst: s.compact_values(target_segments=1),
+    "gc_values": lambda s, dst: s.gc_values(discard_ratio=0.01, now=NOW),
+    "clone_to": lambda s, dst: s.clone_to(dst),
+}
+
+
+@pytest.fixture(scope="module")
+def _commit_base(spark, tmp_path_factory):
+    """Two value-separated batches (the first big value overwritten, so
+    the values log holds garbage), a column family and a snapshot hold."""
+    base = KVStore(spark, str(tmp_path_factory.mktemp("commit_base") / "kv"), value_threshold=16)
+    base.set_batch([Entry("a", b"1"), Entry("big", b"x" * 32)])
+    base.set_batch([Entry("big", b"y" * 32), Entry("c", b"3")])
+    base.create_cf("fam").set(Entry("f", b"4"))
+    base.hold_snapshot("h")
+    return base
+
+
+def _all_rows(store):
+    return {r["key"]: bytes(r["value"]) for r in store.view(now=NOW, cf=CF_ALL).collect()}
+
+
+@pytest.mark.parametrize("op", sorted(_COMMIT_OPS))
+def test_failed_commit_leaves_state_and_retry_lands(_commit_base, spark, tmp_path, monkeypatch, op):
+    """Atomic commit at every commit site: when the CURRENT swap fails,
+    the handle keeps its pre-op state (no committed container was edited
+    in place), a reopened store reads exactly the pre-op rows, and a
+    retry of the op commits over the dead attempt's snapshot file."""
+    from dataclasses import asdict
+
+    store = _commit_base.clone_to(str(tmp_path / "kv"), hardlink=True)
+    before = store.manifest.state
+    before_json = asdict(before)
+    rows = _all_rows(store)
+    real_replace, fired = os.replace, []
+
+    def replace_failing_once(src, dst, *a, **kw):
+        if os.path.basename(dst) == "CURRENT" and not fired:
+            fired.append(dst)
+            raise OSError("injected CURRENT swap failure")
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", replace_failing_once)
+    dst = str(tmp_path / "clone")
+    with pytest.raises(OSError, match="injected"):
+        _COMMIT_OPS[op](store, dst)
+    assert fired
+    assert store.manifest.state is before
+    assert asdict(store.manifest.state) == before_json
+    reopened = KVStore(spark, store.root)
+    assert reopened.manifest.state == before
+    assert _all_rows(reopened) == rows
+    reopened.close()
+    if op == "clone_to":
+        # the failed clone released its handle on the destination
+        assert not os.path.exists(os.path.join(dst, "_manifest", "DBLOCK"))
+
+    out = _COMMIT_OPS[op](store, dst)
+    target = out if op == "clone_to" else store
+    assert target.manifest.state.version == (
+        1 if op == "clone_to" else before.version + 1
+    )
+    assert Manifest(target.root).state == target.manifest.state
 
 
 # -------------------------------------------------- idempotent tagged ingest
@@ -2987,6 +3093,43 @@ def test_clone_to_is_consistent_and_independent(spark, tmp_path):
     clone3 = clone.clone_to(str(tmp_path / "b3"))
     got3 = {r["key"]: bytes(r["value"]) for r in clone3.view(now=NOW).collect()}
     assert got3["big"] == b"Z" * 200 and got3["only_clone"] == b"y"
+
+
+def test_clone_to_carries_every_manifest_field(spark, tmp_path):
+    """clone_to copies the whole manifest state — a field added later
+    cannot be dropped. Every field is set away from its default first."""
+    from dataclasses import MISSING, fields, replace
+
+    store = KVStore(spark, str(tmp_path / "src"), value_threshold=16)
+    store.set_batch([Entry("a", b"1"), Entry("big", b"Z" * 64)])
+    store.manifest.commit(
+        stream_commits={"ckpt": 3},
+        compacted_bytes=123,
+        range_tombstones=[{"start": "x", "end": "y", "seq": 1}],
+        held_snapshots={"h": 1},
+        has_merge_operands=True,
+        writer_epoch=4,
+        column_families={
+            "fam": {"seq": 1, "compaction_style": None, "value_threshold": None, "merge_op": None}
+        },
+        column_families_ever=True,
+    )
+    src = store.manifest.state
+    for f in fields(ManifestState):
+        default = f.default if f.default is not MISSING else f.default_factory()
+        assert getattr(src, f.name) != default, f.name
+    clone = store.clone_to(str(tmp_path / "dst"))
+    got = Manifest(clone.root).state  # as committed to disk
+    for f in fields(ManifestState):
+        if f.name == "version":
+            continue
+        if f.name == "segments":
+            assert [replace(s, path="") for s in got.segments] == [
+                replace(s, path="") for s in src.segments
+            ]
+            assert all(s.path.startswith(clone.root) for s in got.segments)
+        else:
+            assert getattr(got, f.name) == getattr(src, f.name), f.name
 
 
 # ------------------------------------------- feature-interaction coverage

@@ -12,9 +12,7 @@
    naive full-canvas recomputation exactly;
 5. parse_ogg_opus counts audio packets after the first two COMPLETED
    packets (RFC 7845 allows OpusTags to span pages — tags continuation
-   pages must not count as audio);
-6. a cf-scoped fold_merges routes folded values with the FAMILY's
-   value threshold, not the store default.
+   pages must not count as audio).
 """
 
 from __future__ import annotations
@@ -187,40 +185,6 @@ def test_ogg_multipage_tags_not_counted_as_audio():
     assert m2["n_packets"] == 5 and m2["n_pages"] == 4
 
 
-def test_cf_scoped_fold_respects_family_threshold(spark, tmp_path):
-    """A fold on a family with a LARGER threshold than the store default
-    must keep the folded value inline (ADVICE r14: it was routed with
-    the store default and pushed to the values table)."""
-    from octopusdb_spark.kv import Entry, KVStore
-    from octopusdb_spark.kv.store import BIT_MERGE
-    from pyspark.sql import functions as F
-
-    store = KVStore(spark, str(tmp_path / "foldthr"),
-                    value_threshold=16, merge_op="append")
-    big = store.create_cf("big", value_threshold=1024)
-    big.set(Entry("k", b"v" * 8))
-    big.merge("k", b"w" * 12)
-    big.merge("k", b"x" * 12)
-    folded_val = b"v" * 8 + b"," + b"w" * 12 + b"," + b"x" * 12  # 34 > 16
-    assert big.fold_merges(now=10**15) == 1
-    assert big.get("k", now=10**15).value == folded_val
-
-    rows = (
-        store.raw_df()
-        .filter(
-            (F.col("key") == F.lit(big._k("k")))
-            & (F.col("meta").bitwiseAND(F.lit(BIT_MERGE)) == 0)
-        )
-        .orderBy(F.col("seq").desc())
-        .select("value", "value_ptr")
-        .collect()
-    )
-    newest = rows[0]
-    assert newest["value_ptr"] is None  # inline under the FAMILY threshold
-    assert bytes(newest["value"]) == folded_val
-    store.close()
-
-
 def test_sidx_unknown_version_raises():
     """Review r15: an unknown sidx version must raise, not decode
     references at version-0 field widths."""
@@ -302,34 +266,3 @@ def test_ogg_packet_flood_stays_bounded():
     flood = _raw_page(9, 2, -1, 0x00, [0] * 200, b"")
     with pytest.raises(ValueError, match="zero-length Opus audio packet"):
         parse_ogg_opus(pages[0] + pages[1] + flood + pages[2])
-
-
-def test_cross_namespace_fold_refuses_on_threshold_mismatch(spark, tmp_path):
-    """Review r15: a CF_ALL fold cannot honor per-family value
-    thresholds — it must refuse loudly (mirroring the heterogeneous
-    merge-op refusal) instead of routing every family's folded values
-    with the store default."""
-    from octopusdb_spark.kv import Entry, KVStore
-
-    store = KVStore(spark, str(tmp_path / "foldall"),
-                    value_threshold=16, merge_op="append")
-    big = store.create_cf("big", value_threshold=1024)
-    store.set(Entry("s", b"a"))
-    store.merge("s", b"b")
-    big.set(Entry("k", b"v"))
-    big.merge("k", b"w")
-    with pytest.raises(ValueError, match="per-family value thresholds"):
-        store.fold_merges(now=10**15)
-    # the per-family paths still work
-    assert big.fold_merges(now=10**15) == 1
-    assert big.get("k", now=10**15).value == b"v,w"
-    # a same-threshold family does NOT block the cross-namespace fold
-    store2 = KVStore(spark, str(tmp_path / "foldall2"),
-                     value_threshold=16, merge_op="append")
-    store2.create_cf("same")  # inherits the store threshold
-    store2.set(Entry("s", b"a"))
-    store2.merge("s", b"b")
-    assert store2.fold_merges(now=10**15) == 1
-    assert store2.get("s", now=10**15).value == b"a,b"
-    store.close()
-    store2.close()
