@@ -262,10 +262,11 @@ class OctopusDB:
         return self.kv.info()
 
     def pin(self, now: int | None = None):
-        """Pinned point-read session: ``with db.pin(now=...):`` makes every
-        ``get``/``mget`` inside resolve against one shared cached live view
-        instead of replanning per call (see `KVStore.pin`). Writes inside
-        the session invalidate and transparently rebuild the cache."""
+        """Pinned read session: ``with db.pin(now=...):`` makes every
+        ``get``/``mget``/``scan_df`` inside (at the pin's ``now``) read one
+        shared cached live view, one Spark job per read, instead of
+        replanning per call (see `KVStore.pin`). Writes inside the session
+        invalidate the cache, and the next read rebuilds it."""
         return self.kv.pin(now=now)
 
     def run_value_log_gc(self, discard_ratio: float = 0.5, now: int | None = None) -> list:

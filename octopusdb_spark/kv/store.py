@@ -54,6 +54,8 @@ shuffle local to the touched key range.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 import re
@@ -192,6 +194,20 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
+def _serialized(method):
+    """Run a read-modify-commit ``KVStore`` method under the handle's
+    re-entrant writer lock, so two threads writing through one handle
+    cannot compute their edits from the same state (a lost edit) or
+    overlap their manifest flocks (a ``ManifestConflictError``)."""
+
+    @functools.wraps(method)
+    def locked(self, *args, **kwargs):
+        with self._write_lock:
+            return method(self, *args, **kwargs)
+
+    return locked
+
+
 class StaleWriterError(RuntimeError):
     """A replication feed arrived from a DEPOSED writer generation: the
     feed's ``source_epoch`` is below this store's durable ``writer_epoch``
@@ -277,16 +293,16 @@ class KVStore:
         self._schema = data_schema(key_type)
         self.manifest = Manifest(root)
         self._acquire_dir_lock()
-        # Serializes the pinned-cache check-and-rebuild (cache_view /
-        # cached_view / uncache_view / _pinned_view): KVService handles
-        # requests on multiple ThreadingTCPServer threads, and without
-        # this two concurrent first reads (or reads racing a
-        # version-invalidating write) interleave so each rebuild
-        # displaces the last — correct via lineage recompute, but the
-        # "one shared cached frame" pin contract degrades to repeated
-        # uncached scans. RLock because cache_view calls uncache_view
-        # and _pinned_view calls both (ADVICE r7).
+        # The read cache: now -> (manifest version, cached live view),
+        # and the active pin's now (None outside a pin). _cache_lock makes
+        # each check-and-rebuild atomic: KVService reads on several
+        # threads, and exactly one of them rebuilds per manifest version.
+        self._views: dict = {}
+        self._pin_now = None
         self._cache_lock = threading.RLock()
+        # Held by every method that reads the manifest state and then
+        # commits (see _serialized); reads never take it.
+        self._write_lock = threading.RLock()
 
     # -------------------------------------------------------- directory lock
     def _dir_lock_path(self) -> str:
@@ -403,6 +419,7 @@ class KVStore:
         """Batched merge operands: ``[(key, operand_bytes), ...]``."""
         self.set_batch([Entry(key=k, value=v, merge=True) for k, v in items])
 
+    @_serialized
     def delete_range(self, start=None, end=None, prefix=None) -> int:
         """Range tombstone — the RocksDB/Badger DeleteRange analog: hide
         every key in [start, end) (or under ``prefix``) whose version
@@ -500,6 +517,7 @@ class KVStore:
                     "instead (default-namespace keys must not lead with \\x02)"
                 )
 
+    @_serialized
     def set_batch(
         self,
         entries: list,
@@ -628,6 +646,7 @@ class KVStore:
             **({"has_merge_operands": True} if any_merge else {}),
         )
 
+    @_serialized
     def ingest_df(
         self,
         df: DataFrame,
@@ -1120,9 +1139,13 @@ class KVStore:
         at_version: int | None = None,
         cf: str | None = None,
         _fold_marker: bool = False,
+        _state=None,
     ) -> DataFrame:
         """The live view: newest version, tombstones hidden, TTL applied,
         big values re-joined (`kv/db.go:89-130` read path as one plan).
+
+        ``_state`` (internal): the manifest state to read, already loaded
+        by the caller (``scan`` prunes on it), in place of ``at_version``.
 
         ``_fold_marker`` (internal, r17): append a boolean ``_folded``
         column — True iff the row's value folded at least one operand.
@@ -1154,7 +1177,7 @@ class KVStore:
         (internal: changefeed expansion, pre-images, fold_merges,
         maintenance must see all namespaces)."""
         now = int(time.time()) if now is None else now
-        src_state = (
+        src_state = _state if _state is not None else (
             self.manifest.load_version(at_version)
             if at_version is not None
             else self.manifest.state
@@ -1224,10 +1247,7 @@ class KVStore:
         if cf is None or not families:
             return self.merge_op
         if cf == CF_ALL:
-            mixed = {
-                n: (self._cf_meta(v)["merge_op"] or self.merge_op)
-                for n, v in families.items()
-            }
+            mixed = {n: self._cf_effective(n, src_state)["merge_op"] for n in families}
             bad = {n: o for n, o in mixed.items() if o != self.merge_op}
             if bad:
                 raise ValueError(
@@ -1237,9 +1257,7 @@ class KVStore:
                     "(view(cf=...)) or align the operators"
                 )
             return self.merge_op
-        if str(cf) not in families:
-            raise ValueError(f"unknown column family {cf!r}")
-        return self._cf_meta(families[str(cf)])["merge_op"] or self.merge_op
+        return self._cf_effective(cf, src_state)["merge_op"]
 
     def _merged_fold(
         self, nm: DataFrame, m_rows: DataFrame, rt_list, vsegs, now: int,
@@ -1337,22 +1355,14 @@ class KVStore:
         as_of: int | None = None,
         cf: str | None = None,
     ):
-        """Point read with manifest min/max pruning (SST interval search,
-        `kv/lsm/level_handler.go:45-64`) + Parquet bloom/stats pushdown.
-        Inside a ``pin()`` session the read hits the shared cached view
-        (no replanning, no segment scan). ``cf`` scopes the namespace
-        (the key must already be ENCODED — ``ColumnFamily.get`` does
-        this); CF reads bypass the default-namespace pinned cache."""
-        df = self._pinned_view(now, as_of) if cf is None else None
-        if df is None:
-            segs = self.manifest.prune_for_key(self._enc(key))
-            if not segs:
-                return None
-            df = self.view(now=now, segs=segs, as_of=as_of, cf=cf)
-        rows = df.filter(F.col("key") == key).limit(1).collect()
-        if not rows or rows[0]["value"] is None:  # view() filters NULLs too
-            return None
-        return self._entry(rows[0])
+        """Point read: ``mget([key])`` plus a lookup, so it shares mget's
+        manifest min/max pruning (SST interval search,
+        `kv/lsm/level_handler.go:45-64`), Parquet bloom/stats pushdown and,
+        inside a ``pin()``, the pinned view (one job, no replanning).
+        ``cf`` scopes the namespace (the key must already be ENCODED —
+        ``ColumnFamily.get`` does this)."""
+        got = self.mget([key], now=now, as_of=as_of, cf=cf)
+        return got.get(bytes(key) if self.key_type == "binary" else key)
 
     def _entry(self, r) -> Entry:
         """A view row as the client-facing ``Entry``."""
@@ -1375,10 +1385,12 @@ class KVStore:
         are pruned to the union of per-key candidate sets, then a single
         IN-filtered view scan resolves every key — the pattern a caller
         looping ``get`` actually wants. Returns {key: Entry} for found keys
-        (missing/tombstoned/expired keys are absent). ``cf`` as in ``get``."""
+        (missing/tombstoned/expired keys are absent). ``cf`` scopes the
+        namespace (keys already ENCODED). Inside a ``pin()`` the read
+        filters the pinned view instead (``_pinned_view``)."""
         if not keys:
             return {}
-        df = self._pinned_view(now, as_of) if cf is None else None
+        df = self._pinned_view(now, as_of=as_of, cf=cf)
         if df is None:
             segs = self._union_segments(
                 self.manifest.prune_for_key(self._enc(k)) for k in keys
@@ -1406,18 +1418,24 @@ class KVStore:
         Bounds are ``bytes`` in binary-key mode; a byte prefix becomes the
         half-open range [prefix, increment-with-carry(prefix)).
         ``at_version`` scans a historical manifest snapshot (time travel),
-        with the same file-level pruning over that snapshot's segments."""
+        with the same file-level pruning over that snapshot's segments.
+        Inside a ``pin()``, a default-namespace scan at the pin's ``now``
+        (no ``as_of``/``at_version``) filters and sorts the pinned view."""
         lo = start if start is not None else prefix
         hi = end
         if prefix is not None and end is None:
             hi = _prefix_upper_bound(prefix)
-        hist_segs = (
-            self.manifest.load_version(at_version).data_segments()
-            if at_version is not None
-            else None
-        )
-        segs = self.manifest.prune_for_range(self._enc(lo), self._enc(hi), hist_segs)
-        df = self.view(now=now, segs=segs, as_of=as_of, at_version=at_version, cf=cf)
+        df = self._pinned_view(now, as_of=as_of, cf=cf, at_version=at_version)
+        if df is None:
+            state = (
+                self.manifest.load_version(at_version)
+                if at_version is not None
+                else self.manifest.state
+            )
+            segs = self.manifest.prune_for_range(
+                self._enc(lo), self._enc(hi), state.data_segments()
+            )
+            df = self.view(now=now, segs=segs, as_of=as_of, cf=cf, _state=state)
         if prefix is not None:
             if self.key_type == "binary":
                 # range form — equivalent to startswith for byte keys
@@ -1693,6 +1711,7 @@ class KVStore:
                 out = out.filter(ns)
         return out
 
+    @_serialized
     def apply_changes(
         self,
         feed: DataFrame,
@@ -1780,123 +1799,94 @@ class KVStore:
             raise StaleWriterError(str(e)) from e
 
     def cache_view(self, now: int | None = None) -> DataFrame:
-        """Pin the current live view in executor memory — the block-cache
-        analog (A13, `kv/lsm/cache.go:7-28`): repeated reads skip the
-        segment scan + dedup entirely. Spark's storage layer replaces
-        W-TinyLFU (LRU eviction under memory pressure). The pin is tied to
-        this manifest version; any write invalidates it."""
+        """Cache the live view at ``now`` in executor memory — the
+        block-cache analog (A13, `kv/lsm/cache.go:7-28`): reads served
+        from it skip the segment scan + dedup entirely. Spark's storage
+        layer replaces W-TinyLFU (LRU eviction under memory pressure). The
+        frame is stamped with the manifest version it was planned from, so
+        any write invalidates it; building one replaces the frame cached
+        at the same ``now`` and releases every frame of an older version."""
+        now = int(time.time()) if now is None else int(now)
         with self._cache_lock:
-            if getattr(self, "_cached_view", None) is not None:
-                self.uncache_view()
-            now = int(time.time()) if now is None else int(now)
-            # capture the version BEFORE building the plan: a write
-            # committing between view() and the stamp would otherwise tag
-            # an old-segment-list plan with the NEW version — a stale
-            # cache no later version check can ever invalidate (found by
-            # the concurrent-clients service hammer)
+            # stamp the version BEFORE planning: a write committing
+            # between view() and the stamp would otherwise tag an
+            # old-segment-list plan with the NEW version — a stale cache
+            # no later version check can ever invalidate (found by the
+            # concurrent-clients service hammer)
             version = self.manifest.state.version
+            self._drop_views(lambda n, v: n == now or v < version)
             df = self.view(now=now).cache()
-            self._cached_view = df
-            self._cached_version = version
-            self._cached_now = now  # TTL evaluation time baked into the cache
+            self._views[now] = (version, df)
             return df
 
     def cached_view(self) -> DataFrame | None:
-        """The pinned view if still valid for the current manifest version."""
+        """The cached view at the active pin's ``now`` (outside a pin: the
+        most recently built one), if still valid for the current manifest
+        version. Frames a write has invalidated are released."""
         with self._cache_lock:
-            if getattr(self, "_cached_view", None) is None:
-                return None
-            if self._cached_version != self.manifest.state.version:
-                self.uncache_view()
-                return None
-            return self._cached_view
+            version = self.manifest.state.version
+            self._drop_views(lambda n, v: v != version)
+            if self._pin_now is not None:
+                hit = self._views.get(self._pin_now)
+            else:
+                hit = next(reversed(self._views.values()), None)
+            return None if hit is None else hit[1]
 
     def uncache_view(self) -> None:
+        """Release every cached view."""
         with self._cache_lock:
-            if getattr(self, "_cached_view", None) is not None:
-                self._cached_view.unpersist()
-                self._cached_view = None
-                self._cached_version = None
-                self._cached_now = None
+            self._drop_views(lambda n, v: True)
 
+    def _drop_views(self, stale) -> None:
+        """Unpersist and forget each cached view whose (now, version)
+        ``stale`` selects; the caller holds ``_cache_lock``."""
+        for n in [n for n, (v, _) in self._views.items() if stale(n, v)]:
+            self._views.pop(n)[1].unpersist()
+
+    @contextlib.contextmanager
     def pin(self, now: int | None = None):
         """Pinned-read session: inside ``with store.pin(now=...):``, every
-        ``get``/``mget`` resolves against one shared cached live view
-        (``cache_view``) instead of replanning the full
-        scan → dedup → values-join per call — the repeated-point-read
-        pattern a driver loop actually produces. The cache is built
-        lazily on first read, TTL is evaluated at the pin's fixed ``now``
-        (a pinned session IS a consistent read point), and a write
-        invalidates it via the existing manifest-version check, so the
-        next read transparently rebuilds against the new version. Reads
-        that pass ``as_of`` or a different ``now`` bypass the pin (they
-        ask for a different snapshot/time). Sessions nest: an inner pin
-        restores the outer pin's state on exit, and a cache the outer pin
-        (or the user, via ``cache_view``) built before entry survives —
-        if this session's different-``now`` reads displaced it, exit
-        re-registers it at its original ``now`` (lazily, so its blocks
-        re-warm on the next read) unless a write moved the manifest, which
-        would have version-invalidated the original cache anyway."""
-        store = self
-
-        class _PinnedSession:
-            def __enter__(self):
-                self._saved = (
-                    getattr(store, "_pinned", False),
-                    getattr(store, "_pinned_now", None),
-                )
-                self._pre_cache = store.cached_view()
-                self._pre_now = getattr(store, "_cached_now", None)
-                self._pre_version = getattr(store, "_cached_version", None)
-                store._pinned_now = int(time.time()) if now is None else int(now)
-                store._pinned = True
-                return store
-
-            def __exit__(self, *exc):
-                outer_pinned, outer_now = self._saved
-                cur = store.cached_view()
-                keep = cur is not None and (
-                    cur is self._pre_cache
-                    or (outer_pinned and store._cached_now == outer_now)
-                )
-                if not keep:
-                    store.uncache_view()
-                    # A pre-entry cache displaced by this session's
-                    # different-now rebuild is re-registered on exit
-                    # (lazily — .cache() runs no job; blocks re-warm on
-                    # next read), so the caller's cache_view survives the
-                    # pin as documented (ADVICE r6). Skipped when the
-                    # manifest moved inside the pin: the original cache
-                    # would have been version-invalidated anyway.
-                    if (
-                        self._pre_cache is not None
-                        and cur is not self._pre_cache
-                        and store.manifest.state.version == self._pre_version
-                    ):
-                        store.cache_view(now=self._pre_now)
-                store._pinned, store._pinned_now = outer_pinned, outer_now
-                return False
-
-        return _PinnedSession()
-
-    def _pinned_view(self, now: int | None, as_of: int | None) -> DataFrame | None:
-        """The shared pinned view when this read can use it: pin active, no
-        as_of override, and the read's TTL time matches the pin's. A cached
-        view built at a DIFFERENT ``now`` (e.g. by an earlier cache_view or
-        an inner pin) is rebuilt, never served with the wrong TTL time."""
-        if not getattr(self, "_pinned", False) or as_of is not None:
-            return None
-        if now is not None and now != self._pinned_now:
-            return None
-        # One atomic check-and-rebuild: exactly one service thread
-        # rebuilds per manifest version; the rest reuse its frame.
+        default-namespace ``get``/``mget``/``scan`` at the pin's ``now``
+        reads one shared cached live view (``cache_view``) instead of
+        replanning the scan → dedup → values-join per call: one Spark job
+        per read. The view is built lazily on the first read, TTL is
+        evaluated at the pin's fixed ``now`` (a pinned session IS a
+        consistent read point), and a write moves the manifest version, so
+        the next read rebuilds against it. Reads with another ``now``, or
+        with ``as_of``, ``at_version`` or ``cf``, bypass the pin. Pins
+        nest: exit restores the outer pin's ``now`` and releases only the
+        view this pin built, so a view cached before entry (by
+        ``cache_view`` or an outer pin) is never displaced."""
+        now = int(time.time()) if now is None else int(now)
         with self._cache_lock:
-            df = self.cached_view()
-            if df is not None and self._cached_now != self._pinned_now:
-                df = None  # wrong TTL time baked in — rebuild below
-            if df is None:
-                df = self.cache_view(now=self._pinned_now)
-            return df
+            outer, self._pin_now = self._pin_now, now
+            pre = self._views.get(now)
+        try:
+            yield self
+        finally:
+            with self._cache_lock:
+                self._pin_now = outer
+                cur = self._views.get(now)
+                if outer != now and cur is not None and cur is not pre:
+                    self._drop_views(lambda n, v: n == now)
+
+    def _pinned_view(self, now, as_of=None, cf=None, at_version=None):
+        """The pinned view for a default-namespace read at the active pin's
+        ``now`` (rebuilt when missing or stale), else None: the read then
+        plans its own view."""
+        pin_now = self._pin_now
+        if pin_now is None or now not in (None, pin_now):
+            return None
+        if as_of is not None or cf is not None or at_version is not None:
+            return None
+        # one atomic check-and-rebuild: exactly one service thread
+        # rebuilds per manifest version; the rest reuse its frame
+        with self._cache_lock:
+            hit = self._views.get(pin_now)
+            if hit is not None and hit[0] == self.manifest.state.version:
+                return hit[1]
+            # self.cache_view: an instance attribute may wrap the rebuild
+            return self.cache_view(now=pin_now)
 
     def snapshot_seq(self) -> int:
         """The sequence number capturing everything committed so far — pass
@@ -1913,6 +1903,7 @@ class KVStore:
         st = self.manifest.state
         return Snapshot(seq=st.next_seq - 1, manifest_version=st.version)
 
+    @_serialized
     def hold_snapshot(self, holder: str, seq: int | None = None) -> int:
         """Register a named snapshot hold (the RocksDB snapshot-list /
         Badger minReadTs analog, `kv/utils/key.go:32-37` versioned reads):
@@ -1930,6 +1921,7 @@ class KVStore:
         self.manifest.commit(held_snapshots={**held, str(holder): seq})
         return seq
 
+    @_serialized
     def release_snapshot(self, holder: str) -> None:
         """Drop a named hold; unknown names are a no-op (idempotent)."""
         held = self.manifest.state.held_snapshots
@@ -1972,6 +1964,7 @@ class KVStore:
         ``promote()``; consumers refuse older stamps (``apply_changes``)."""
         return self.manifest.state.writer_epoch
 
+    @_serialized
     def promote(self, past_epoch: int | None = None) -> int:
         """Promote this store to primary after a failover: bump the durable
         writer epoch past the deposed primary's (defaults to past our own —
@@ -1986,6 +1979,7 @@ class KVStore:
         self.manifest.commit(writer_epoch=new_epoch)
         return new_epoch
 
+    @_serialized
     def _adopt_epoch(self, source_epoch: int) -> None:
         """Follow a newer leader: durably raise our epoch watermark so a
         later feed from any OLDER generation is refused. No-op when the
@@ -2061,10 +2055,11 @@ class KVStore:
             "merge_op": None,
         }
 
-    def _cf_effective(self, name: str) -> dict:
+    def _cf_effective(self, name: str, state=None) -> dict:
         """The family's EFFECTIVE options (recorded override or the store
-        default for each): compaction_style, value_threshold, merge_op."""
-        cfs = self.manifest.state.column_families
+        default for each): compaction_style, value_threshold, merge_op —
+        from ``state``'s catalog (default: the live manifest)."""
+        cfs = (state or self.manifest.state).column_families
         if str(name) not in cfs:
             raise ValueError(f"unknown column family {name!r}")
         meta = self._cf_meta(cfs[str(name)])
@@ -2092,12 +2087,9 @@ class KVStore:
     def cf_compaction_style(self, name: str) -> str:
         """The family's effective compaction policy: its recorded style,
         else the store default."""
-        cfs = self.manifest.state.column_families
-        if str(name) not in cfs:
-            raise ValueError(f"unknown column family {name!r}")
-        style = self._cf_meta(cfs[str(name)])["compaction_style"]
-        return style or self.compaction_style
+        return self._cf_effective(name)["compaction_style"]
 
+    @_serialized
     def create_cf(
         self,
         name: str,
@@ -2203,6 +2195,7 @@ class KVStore:
         """Registered column-family names, sorted."""
         return sorted(self.manifest.state.column_families)
 
+    @_serialized
     def drop_cf(self, name: str) -> int:
         """Drop a column family — O(1) regardless of its row count, in ONE
         atomic manifest commit: the catalog entry is removed and a range
@@ -2271,6 +2264,7 @@ class KVStore:
             d["bytes"] += s.size_bytes
             d["rows"] += s.row_count
         live_bytes = sum(s.size_bytes for s in st.data_segments())
+        effective = {n: self._cf_effective(n, st) for n in sorted(st.column_families)}
         return {
             "manifest_version": st.version,
             "next_seq": st.next_seq,
@@ -2294,27 +2288,20 @@ class KVStore:
             "writer_epoch": st.writer_epoch,
             "column_families": sorted(st.column_families),
             "column_family_styles": {
-                n: self._cf_meta(v)["compaction_style"] or self.compaction_style
-                for n, v in sorted(st.column_families.items())
+                n: e["compaction_style"] for n, e in effective.items()
             },
             # the rest of the per-CF options contract (r14): effective
             # value-separation threshold + merge operator per family
             "column_family_options": {
-                n: {
-                    "value_threshold": (
-                        self.value_threshold
-                        if self._cf_meta(v)["value_threshold"] is None
-                        else int(self._cf_meta(v)["value_threshold"])
-                    ),
-                    "merge_op": self._cf_meta(v)["merge_op"] or self.merge_op,
-                }
-                for n, v in sorted(st.column_families.items())
+                n: {"value_threshold": e["value_threshold"], "merge_op": e["merge_op"]}
+                for n, e in effective.items()
             },
             # sticky namespace gate (r11): True while any reserved-prefix
             # rows may exist — mirrors has_merge_operands' lifecycle
             "column_families_ever": st.column_families_ever,
         }
 
+    @_serialized
     def fold_merges(
         self,
         now: int | None = None,
@@ -2684,6 +2671,7 @@ class KVStore:
             out.append((level, score))
         return sorted(out, key=lambda x: -x[1])
 
+    @_serialized
     def compact_level(self, src_level: int, now: int | None = None, target_segments: int = 4) -> None:
         """Merge all src-level segments with the key-overlapping segments of
         the next level into new next-level segments (doCompact,
@@ -2872,6 +2860,7 @@ class KVStore:
         ]
         return sorted(out, key=lambda x: -x[1])
 
+    @_serialized
     def compact_tier(
         self, segments: list, now: int | None = None, target_segments: int = 4
     ) -> None:
@@ -3028,6 +3017,7 @@ class KVStore:
             "value_segments_merged": merged,
         }
 
+    @_serialized
     def compact(
         self,
         now: int | None = None,
@@ -3259,6 +3249,7 @@ class KVStore:
         self.uncache_view()
         return self.manifest.prune_versions(keep_last=keep_versions)
 
+    @_serialized
     def compact_range(
         self,
         start=None,
@@ -3305,6 +3296,7 @@ class KVStore:
         self._rewrite_commit(participants, merged, self.MAX_LEVEL, target_segments)
         return len(participants)
 
+    @_serialized
     def compact_values(self, target_segments: int = 4) -> int:
         """Merge the value-log's many small segments (one lands per write
         batch) into ``target_segments`` files — pure file-count hygiene:
@@ -3357,6 +3349,7 @@ class KVStore:
         )
         return len(vsegs)
 
+    @_serialized
     def gc_values(self, discard_ratio: float = 0.5, now: int | None = None) -> list:
         """Value-log GC (`kv/vlog_gc.go`): candidate segments are selected
         from the incremental discard stats that compaction maintains

@@ -9,8 +9,9 @@ library: a threaded TCP server speaking newline-delimited JSON (the
 reference's own payload encoding, minus the gRPC framing the reference
 never wired up), serving reads from a live `KVStore` through exactly the
 read path the Python API uses — manifest pruning, bloom/stats pushdown,
-and (by default) a pinned cached view so repeated point reads share one
-materialized frame instead of replanning per request (`KVStore.pin`).
+and (by default) a pinned cached view so repeated gets, mgets and scans
+share one materialized frame instead of replanning per request
+(`KVStore.pin`).
 
 Protocol: one JSON object per line, one JSON reply per line.
 
@@ -61,8 +62,9 @@ keeps the connection open; an empty line closes it.
 Scale honesty: every request runs Spark jobs on the driver, so this is an
 OPERATIONAL lookup endpoint (debugging, spot checks, cache warmers) — the
 same altitude as the reference's unimplemented proto, not an OLTP serving
-tier. The pinned view bounds the marginal cost of a read to one filter +
-collect over a cached frame; `scan` is capped at MAX_SCAN_ROWS so no
+tier. The pinned view bounds the marginal cost of a default-namespace
+read to one job: a filter + collect (get, mget) or a filter + sorted take
+(scan) over a cached frame; `scan` is capped at MAX_SCAN_ROWS so no
 request can materialize an unbounded range onto the driver.
 """
 
@@ -96,7 +98,8 @@ class KVService:
     (a service session IS a consistent read point, same rule as
     ``KVStore.pin``); defaults to wall-clock at ``start()``. The service
     holds a pinned-read session for its lifetime, so concurrent and
-    repeated gets resolve against one shared cached view; writes through
+    repeated gets, mgets and scans resolve against one shared cached view
+    (``cf`` and ``as_of`` requests plan their own); writes through
     the underlying store invalidate it via the manifest-version check and
     the next read transparently rebuilds.
     """

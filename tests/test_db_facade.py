@@ -259,15 +259,18 @@ def test_pinned_reads_reuse_cached_view(db):
         # an as-of read asks for a different snapshot: bypasses the pin
         snap = db.snapshot()
         assert db.get("a", now=NOW, as_of=snap) == b"1"
+        assert calls == 2
         store.view = orig_view
+        built = store.cached_view()
     assert store.cached_view() is None  # released on exit
+    assert not built.is_cached
 
 
 def test_pin_sessions_nest_and_respect_ttl_time(db):
-    """Nested pins restore the outer session's state, an inner pin at a
+    """Nested pins restore the outer session's now, an inner pin at a
     different TTL time never serves the outer cache, and a pre-existing
     same-now cache is reused rather than rebuilt."""
-    db.set_batch([Entry("a", b"1")])
+    db.set_batch([Entry("a", b"1"), Entry("t", b"ttl", expires_at=NOW + 3)])
     store = db.kv
     pre = store.cache_view(now=NOW)
     with db.pin(now=NOW):
@@ -276,29 +279,34 @@ def test_pin_sessions_nest_and_respect_ttl_time(db):
         with db.pin(now=NOW + 5):
             assert db.get("a", now=NOW + 5) == b"1"
             assert store.cached_view() is not pre  # rebuilt at the inner now
-        # outer pin restored and functional after the inner exit
-        assert store._pinned and store._pinned_now == NOW
-        assert db.get("a", now=NOW) == b"1"
-    assert not store._pinned  # fully released
+            assert db.get("t") is None  # TTL at the inner pin's now
+        # outer pin restored and functional after the inner exit: a read
+        # without now evaluates TTL at NOW, from the outer frame
+        assert db.get("t") == b"ttl"
+        assert store.cached_view() is pre
+    # fully released: a read outside any pin builds no cached view
+    store.uncache_view()
+    assert db.get("a") == b"1"
+    assert store.cached_view() is None
 
 
-def test_pin_restores_displaced_pre_entry_cache(db):
-    """A cache the caller built BEFORE the pin, displaced inside it by a
-    different-now rebuild, is re-registered at its original now on exit
-    (ADVICE r6) — unless a write moved the manifest, in which case the
-    original cache would have been version-invalidated anyway."""
+def test_pin_keeps_pre_entry_cache(db):
+    """A view the caller cached BEFORE a pin at another now is never
+    displaced: the pin builds its own frame beside it and releases only
+    that one on exit. A write inside the pin invalidates both, so exit
+    leaves nothing cached."""
     db.set_batch([Entry("a", b"1")])
     store = db.kv
-    store.cache_view(now=NOW)
+    pre = store.cache_view(now=NOW)
     with db.pin(now=NOW + 5):
-        assert db.get("a", now=NOW + 5) == b"1"  # displaces the NOW cache
-        assert store._cached_now == NOW + 5
-    # restored (lazily) at the caller's original now
-    assert store.cached_view() is not None and store._cached_now == NOW
+        assert db.get("a", now=NOW + 5) == b"1"
+        own = store.cached_view()
+        assert own is not pre  # built beside the NOW cache
+    assert store.cached_view() is pre and pre.is_cached
+    assert not own.is_cached
     assert db.get("a", now=NOW) == b"1"
 
-    # manifest moved inside the pin: no restore, cache fully released
-    store.cache_view(now=NOW)
+    # manifest moved inside the pin: the pre-entry cache is stale too
     with db.pin(now=NOW + 5):
         assert db.get("a", now=NOW + 5) == b"1"
         db.set("b", b"2")

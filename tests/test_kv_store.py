@@ -1319,7 +1319,14 @@ def test_pinned_cache_is_thread_safe(store):
     import threading
 
     store.set_batch([Entry(f"t{i}", f"v{i}".encode()) for i in range(6)])
-    results, errors = [], []
+    results, errors, rebuilds = [], [], []
+    orig_cache_view = store.cache_view
+
+    def cache_view(now=None):  # counts rebuilds, as perfbench does
+        rebuilds.append(now)
+        return orig_cache_view(now=now)
+
+    store.cache_view = cache_view
 
     def reader(i):
         try:
@@ -1333,11 +1340,187 @@ def test_pinned_cache_is_thread_safe(store):
         for t in threads:
             t.start()
         for t in threads:
-            t.join()
+            t.join(timeout=300)
+            assert not t.is_alive()
         assert not errors
         assert all(v == f"v{i % 6}".encode() for i, v in results)
-        # one shared frame survived the race
+        # one shared frame survived the race, built once
         assert store.cached_view() is not None
+        assert rebuilds == [NOW]
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_pinned_reads_run_one_job(spark, store):
+    """Inside a warm pin every default-namespace read is one filter (and,
+    for scan, one sort) over the cached view: exactly one Spark job for a
+    present-key get, an absent-key get, a 16-key mget and a limited scan."""
+    for b in range(3):  # three segments
+        store.set_batch(
+            [Entry(f"k{i:04d}", f"v{i}-{b}".encode()) for i in range(b, 120, 3)]
+        )
+    keys = [f"k{i:04d}" for i in range(16)]
+    with store.pin(now=NOW):
+        assert store.get("k0000").value == b"v0-0"  # builds the pin
+        got = {}
+        assert _jobs_of(spark, lambda: got.update(p=store.get("k0005"))) == 1
+        assert got["p"].value == b"v5-2"
+        assert _jobs_of(spark, lambda: got.update(a=store.get("zzz"))) == 1
+        assert got["a"] is None
+        assert _jobs_of(spark, lambda: got.update(m=store.mget(keys))) == 1
+        assert sorted(got["m"]) == keys
+        scan = store.scan(start="k0050").limit(7)
+        assert _jobs_of(spark, lambda: got.update(s=scan.collect())) == 1
+        assert [r["key"] for r in got["s"]] == [f"k{i:04d}" for i in range(50, 57)]
+
+
+@pytest.mark.parametrize("key_type", ["string", "binary"])
+def test_pinned_scan_matches_unpinned(spark, tmp_path, key_type):
+    """A scan inside a pin filters and sorts the pinned view; it returns
+    the rows the unpinned scan plans for itself — over tombstones, TTL at
+    the pin's now, a range tombstone, value-separated rows and (on the
+    string store) merge operands, for prefix, start/end and descending
+    scans — and a write inside the pin shows up in the next scan."""
+    binary = key_type == "binary"
+
+    def k(s):
+        return s.encode() if binary else s
+
+    store = KVStore(
+        spark, str(tmp_path / "kv"), key_type=key_type, value_threshold=16,
+        merge_op=None if binary else "add",
+    )
+    store.set_batch(
+        [Entry(k(f"a{i:02d}"), str(i).encode()) for i in range(20)]
+        + [Entry(k("b00"), b"x" * 40), Entry(k("b01"), b"y" * 40)]
+        + [
+            Entry(k("c00"), b"live", expires_at=NOW + 60),
+            Entry(k("c01"), b"dead", expires_at=NOW - 1),  # alive by wall clock
+        ]
+    )
+    store.delete(k("a03"))
+    store.delete_range(start=k("a10"), end=k("a14"))
+    if not binary:
+        store.merge_batch([("a01", b"5"), ("a11", b"3"), ("d00", b"2")])
+    assert store.manifest.state.value_segments()
+    cases = [
+        {},
+        {"prefix": k("a")},
+        {"prefix": k("a1")},
+        {"start": k("a05"), "end": k("b01")},
+        {"start": k("b")},
+        {"end": k("a08"), "asc": False},
+        {"prefix": k("a"), "asc": False},
+    ]
+
+    def rows(**kw):
+        return [tuple(r) for r in store.scan(**kw).collect()]
+
+    want = [rows(now=NOW, **c) for c in cases]
+    first = [r[0] for r in want[0]]
+    assert k("b00") in first and k("c00") in first
+    assert not [x for x in (k("a03"), k("a10"), k("c01")) if x in first]
+    with store.pin(now=NOW):
+        for c, w in zip(cases, want):
+            assert rows(now=NOW, **c) == w, c
+            assert rows(**c) == w, c  # TTL at the pin's now
+        store.set_batch([Entry(k("a03"), b"back")])
+        got = {r[0]: bytes(r[1]) for r in rows(prefix=k("a"))}
+        assert got[k("a03")] == b"back"
+        pinned = [rows(**c) for c in cases]
+    assert pinned == [rows(now=NOW, **c) for c in cases]
+
+
+def test_pin_bypassed_by_other_read_scopes(store):
+    """Reads at another now, or with as_of, at_version or cf, plan their
+    own view and leave the pinned one in place."""
+    fam = store.create_cf("fam")
+    fam.set(Entry("x", b"2"))
+    store.set_batch([Entry("a", b"1")])
+    version, snap = store.manifest.state.version, store.snapshot_seq()
+    with store.pin(now=NOW):
+        assert store.get("a").value == b"1"  # builds the pinned view
+        pinned = store.cached_view()
+        calls = []
+        orig_view = store.view
+
+        def counting_view(*args, **kwargs):
+            calls.append(kwargs)
+            return orig_view(*args, **kwargs)
+
+        store.view = counting_view
+        assert store.get("a").value == b"1"
+        assert sorted(store.mget(["a"])) == ["a"]
+        assert [r["key"] for r in store.scan().collect()] == ["a"]
+        assert calls == []  # all three read the pinned view
+        assert store.get("a", now=NOW + 1).value == b"1"
+        assert store.get("a", as_of=snap).value == b"1"
+        assert [r["key"] for r in store.scan(at_version=version).collect()] == ["a"]
+        assert fam.get("x").value == b"2"
+        assert [r["key"] for r in fam.scan().collect()] == ["x"]
+        assert len(calls) == 5
+        del store.view
+        assert store.cached_view() is pinned
+
+
+def test_concurrent_holds_on_one_handle(store):
+    """Read-modify-commit methods serialize on the handle's writer lock:
+    two threads registering distinct holds through one handle lose none
+    and never collide on the manifest flock."""
+    import threading
+
+    store.set_batch([Entry("a", b"1")])
+    start, errors = threading.Barrier(2), []
+
+    def holder(t):
+        start.wait()
+        try:
+            for i in range(10):
+                store.hold_snapshot(f"t{t}-{i}", seq=i)
+        except Exception as exc:  # pragma: no cover - failure path
+            errors.append(exc)
+
+    threads = [threading.Thread(target=holder, args=(t,)) for t in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        assert not t.is_alive()
+    assert errors == []
+    assert len(store.manifest.state.held_snapshots) == 20
+    assert Manifest(store.root).state.held_snapshots == store.manifest.state.held_snapshots
+
+
+def test_scan_at_version_loads_manifest_once(store, monkeypatch):
+    """A time-travel scan prunes and reads one loaded historical state."""
+    store.set_batch([Entry("a", b"1")])
+    version = store.manifest.state.version
+    store.set_batch([Entry("a", b"2"), Entry("b", b"3")])
+    calls = []
+    orig = store.manifest.load_version
+
+    def load_version(v):
+        calls.append(v)
+        return orig(v)
+
+    monkeypatch.setattr(store.manifest, "load_version", load_version)
+    rows = store.scan(at_version=version, now=NOW).collect()
+    assert [(r["key"], bytes(r["value"])) for r in rows] == [("a", b"1")]
+    assert calls == [version]
 
 
 def test_holds_preserve_boundary_versions_across_compaction(store):

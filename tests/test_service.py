@@ -137,8 +137,11 @@ def test_failed_bind_leaves_store_unpinned(spark, tmp_path):
         svc2 = KVService(store2, port=taken, now=NOW)
         with pytest.raises(OSError):
             svc2.start()
-        # the failed start must not leave store2 pinned or cached
-        assert getattr(store2, "_pinned", False) is False
+        # the failed start must not leave store2 pinned or cached: a
+        # read afterwards plans its own view instead of building a pin's
+        assert store2.cached_view() is None
+        store2.set(Entry("k", b"v"))
+        assert store2.get("k").value == b"v"
         assert store2.cached_view() is None
         svc2.stop()  # no-op, must not raise
 
