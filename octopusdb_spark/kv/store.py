@@ -1804,8 +1804,9 @@ class KVStore:
         from it skip the segment scan + dedup entirely. Spark's storage
         layer replaces W-TinyLFU (LRU eviction under memory pressure). The
         frame is stamped with the manifest version it was planned from, so
-        any write invalidates it; building one replaces the frame cached
-        at the same ``now`` and releases every frame of an older version."""
+        any write invalidates it. Outside a pin, building one replaces
+        every cached frame; inside one, only the frame at the same ``now``
+        and older versions' frames, so a pin never displaces a prior view."""
         now = int(time.time()) if now is None else int(now)
         with self._cache_lock:
             # stamp the version BEFORE planning: a write committing
@@ -1814,7 +1815,8 @@ class KVStore:
             # no later version check can ever invalidate (found by the
             # concurrent-clients service hammer)
             version = self.manifest.state.version
-            self._drop_views(lambda n, v: n == now or v < version)
+            keep = self._pin_now is not None
+            self._drop_views(lambda n, v: not keep or n == now or v < version)
             df = self.view(now=now).cache()
             self._views[now] = (version, df)
             return df

@@ -10,8 +10,7 @@ reference's own payload encoding, minus the gRPC framing the reference
 never wired up), serving reads from a live `KVStore` through exactly the
 read path the Python API uses — manifest pruning, bloom/stats pushdown,
 and (by default) a pinned cached view so repeated gets, mgets and scans
-share one materialized frame instead of replanning per request
-(`KVStore.pin`).
+share one materialized frame instead of replanning per request (`KVStore.pin`).
 
 Protocol: one JSON object per line, one JSON reply per line.
 
@@ -62,9 +61,8 @@ keeps the connection open; an empty line closes it.
 Scale honesty: every request runs Spark jobs on the driver, so this is an
 OPERATIONAL lookup endpoint (debugging, spot checks, cache warmers) — the
 same altitude as the reference's unimplemented proto, not an OLTP serving
-tier. The pinned view bounds the marginal cost of a default-namespace
-read to one job: a filter + collect (get, mget) or a filter + sorted take
-(scan) over a cached frame; `scan` is capped at MAX_SCAN_ROWS so no
+tier. The pinned view bounds a default-namespace read to one job over a
+cached frame; `scan` is capped at MAX_SCAN_ROWS so no
 request can materialize an unbounded range onto the driver.
 """
 

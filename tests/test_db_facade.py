@@ -270,8 +270,15 @@ def test_pin_sessions_nest_and_respect_ttl_time(db):
     """Nested pins restore the outer session's now, an inner pin at a
     different TTL time never serves the outer cache, and a pre-existing
     same-now cache is reused rather than rebuilt."""
-    db.set_batch([Entry("a", b"1"), Entry("t", b"ttl", expires_at=NOW + 3)])
+    # "u" is alive by wall clock but expired at NOW: only a read at the
+    # outer pin's now misses it
+    db.set_batch([
+        Entry("a", b"1"),
+        Entry("t", b"ttl", expires_at=NOW + 3),
+        Entry("u", b"x", expires_at=NOW - 1),
+    ])
     store = db.kv
+    assert db.get("u") == b"x"
     pre = store.cache_view(now=NOW)
     with db.pin(now=NOW):
         assert db.get("a", now=NOW) == b"1"
@@ -283,10 +290,13 @@ def test_pin_sessions_nest_and_respect_ttl_time(db):
         # outer pin restored and functional after the inner exit: a read
         # without now evaluates TTL at NOW, from the outer frame
         assert db.get("t") == b"ttl"
+        assert db.get("u") is None
         assert store.cached_view() is pre
-    # fully released: a read outside any pin builds no cached view
+    # fully released: reads outside any pin evaluate TTL by wall clock
+    # and build no cached view
     store.uncache_view()
     assert db.get("a") == b"1"
+    assert db.get("u") == b"x"
     assert store.cached_view() is None
 
 

@@ -623,6 +623,19 @@ def test_cache_view_pin_and_invalidate(store):
     assert store.view(now=NOW).count() == 3
 
 
+def test_cache_view_replaces_outside_a_pin(store):
+    """Outside a pin, caching the view at a second ``now`` releases the
+    frame cached at the first: one full copy of the live view at a time."""
+    store.set_batch([Entry("c1", b"x")])
+    first = store.cache_view(now=NOW)
+    assert first.count() == 1 and first.is_cached
+    second = store.cache_view(now=NOW + 1)
+    assert not first.is_cached
+    assert second.is_cached and store.cached_view() is second
+    store.uncache_view()
+    assert not second.is_cached
+
+
 def test_uncommitted_segment_ignored_on_reopen(store, spark):
     """Durability contract (WAL analog, A18): data files without a manifest
     commit — a crash between segment write and commit — are invisible."""
